@@ -39,7 +39,7 @@ import org.apache.spark.sql.SparkSession
   * freshly-persisted RDDs landed in the diff and were released
   * mid-query); exact ownership tracking (round 12) makes it safe by
   * construction, and this mode is the whole-engine witness — every
-  * operator family, not just the RoundCheckpointsSpec microcosm.
+  * operator family, not just the FixpointSpec microcosm.
   *
   * Disk is asserted too: Spark's shuffle/spill/blockmgr directories
   * under the local dir must return to a small constant once the

@@ -1,139 +1,23 @@
 package graft.core
 
-import java.lang.ref.WeakReference
-
-import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
-/** Storage rotation for bounded-fixpoint operators — the generalization
-  * of the round-11 kCore fix (SCALE.md: `localCheckpoint`ing loop state
-  * EVERY round accumulates O(rounds × state) storage blocks; at sf10 the
-  * edge-sized variant GC-thrashed a 32 GB driver into RPC-timeout
-  * shutdown, and the node-sized variants carry the same growth one data
-  * decade further out).
-  *
+/** RDD-layer block helpers for eagerly-checkpointed Datasets.
   * `localCheckpoint` persists at the RDD layer, which `Dataset.unpersist`
-  * cannot reach — the blocks outlive the Dataset reference and are only
-  * dropped when the SparkContext dies (or, eventually, when the RDD
-  * object is GC-collected and the ContextCleaner notices). The release
-  * that works NOW is unpersisting the previous round's RDDs once the new
-  * round's state is materialized. Peak storage is then two rounds of
-  * state at any iteration depth.
-  *
-  * Ownership is EXACT (round 12; previously a persistent-RDD registry
-  * diff): each rotate body tags the datasets it checkpointed via
-  * [[track]], which walks the checkpointed Dataset's public RDD lineage
-  * to the persisted internal RDD and records a weak reference to it.
-  * Nothing outside the loop is ever touched, so a CONCURRENT query on the
-  * same SparkContext — another rotating operator, an interactive
-  * statement caching its own base, a one-shot result checkpoint — is
-  * structurally unaffected: there is no registry snapshot to capture its
-  * blocks and no sweep to release them (the §3.3 multi-statement BI
-  * session runs exactly this shape). It also removes the two
-  * `getPersistentRDDs` registry snapshots the diff paid per round.
-  *
-  * Usage — every loop iteration REPLACES the carried state inside one
-  * [[rotate]] block, tagging each checkpoint:
-  *
-  * {{{
-  * val rc = new RoundCheckpoints(spark.sparkContext)
-  * var state = rc.rotate { rc.track(init.localCheckpoint()) }
-  * while (...) state = rc.rotate { rc.track(step(state).localCheckpoint()) }
-  * state // last round's blocks are never released — they ARE the result
-  * }}}
-  *
-  * Contract:
-  *  - every round-state `localCheckpoint()` inside a `rotate` body must be
-  *    wrapped in [[track]]; the tracked blocks are released when the NEXT
-  *    `rotate` completes. An untracked checkpoint re-opens the O(rounds)
-  *    leak — the operator storage-bound specs are the net for that.
-  *  - state carried ACROSS rounds unscoped (the shared edge table, a
-  *    dimension broadcast) is simply never tracked; intra-round
-  *    `cache()`/`unpersist()` pairs need no tracking at all.
-  *  - a rotate body must consume the previous round's state eagerly
-  *    (localCheckpoint is eager) — after the body returns, that state is
-  *    gone and its lineage is truncated, so it cannot be recomputed.
-  *  - if the body throws, BOTH the partial round's tracked blocks and the
-  *    carried previous round's are released before the rethrow — a failed
-  *    sf10 query must not strand node-sized blocks on a long-lived
-  *    driver. Operators whose failure path is OUTSIDE a body (a
-  *    maxRounds-exhausted throw) call [[releaseAll]] first, as do loops
-  *    whose final state is NOT the result (BPE returns rules, not the
-  *    last pieces table).
-  *  - one instance serves one single-threaded loop (the tracking vars are
-  *    unsynchronized); separate loops on separate threads use separate
-  *    instances and cannot interact.
-  */
-private[graft] final class RoundCheckpoints(sc: SparkContext) {
-  private var prev = List.empty[WeakReference[RDD[_]]]
-  private var cur = List.empty[WeakReference[RDD[_]]]
-
-  /** Tag an eagerly-checkpointed Dataset as THIS round's state: its
-    * persisted internal RDD (found by walking the physical RDD's
-    * dependency lineage — `Dataset.localCheckpoint` persists one RDD the
-    * Dataset's plan then scans) will be unpersisted when the NEXT rotate
-    * completes. Returns the dataset unchanged. Throws if nothing in the
-    * lineage is persisted — i.e. when called on something other than the
-    * result of an eager `localCheckpoint()`/materialized `persist()`. */
-  def track[T](ds: Dataset[T]): Dataset[T] = {
-    val persisted = firstPersisted(ds.queryExecution.toRdd).getOrElse(
-      throw new IllegalArgumentException(
-        "RoundCheckpoints.track: no persisted RDD in the Dataset's " +
-          "lineage — track the result of an eager localCheckpoint()"))
-    cur ::= new WeakReference[RDD[_]](persisted)
-    ds
-  }
-
-  /** Run one round: `body` eagerly materializes and [[track]]s this
-    * round's checkpoints; afterwards the PREVIOUS round's blocks are
-    * released. Returns body's result. If body throws, releases both
-    * rounds and rethrows. */
-  def rotate[T](body: => T): T = {
-    cur = Nil
-    val out =
-      try body
-      catch {
-        case t: Throwable =>
-          release(cur); release(prev); prev = Nil; cur = Nil
-          throw t
-      }
-    release(prev)
-    prev = cur
-    cur = Nil
-    out
-  }
-
-  /** Release everything still tracked (the LAST completed round's blocks
-    * and any partial current round). For failure paths outside a rotate
-    * body, and for loops whose final checkpoint is not the result. */
-  def releaseAll(): Unit = {
-    release(prev); release(cur); prev = Nil; cur = Nil
-  }
-
-  private def firstPersisted(r: RDD[_]): Option[RDD[_]] =
-    RoundCheckpoints.firstPersisted(r)
-
-  private def release(refs: List[WeakReference[RDD[_]]]): Unit =
-    refs.foreach(ref =>
-      Option(ref.get()).foreach(_.unpersist(blocking = false)))
-}
-
+  * cannot reach — the blocks outlive the Dataset reference until the
+  * SparkContext dies (or the ContextCleaner notices a GC'd RDD). The
+  * persisted RDD is found by walking the Dataset's public RDD lineage.
+  * Round-state rotation lives in [[Fixpoint]]. */
 private[graft] object RoundCheckpoints {
 
   /** Unpersist the RDD-layer blocks backing an eagerly-checkpointed
-    * Dataset the caller OWNS and no longer needs — the release
-    * `Dataset.unpersist` cannot perform (it only reaches the SQL cache
-    * manager, not `localCheckpoint`'s RDD-layer persist). Safe ONLY when
-    * every datum derived from `ds` that outlives this call is itself
+    * Dataset the caller OWNS and no longer needs. Safe ONLY when every
+    * datum derived from `ds` that outlives this call is itself
     * materialized with truncated lineage (checkpointed): the blocks are
     * the recovery source for nothing after that. No-ops when nothing in
-    * the lineage is persisted (already released, or never a checkpoint).
-    *
-    * This is how a loop wrapper that materialized its own edge table
-    * hands the blocks back instead of stranding an edge-sized table per
-    * invocation on a long-lived session (the round-12 soak property). */
+    * the lineage is persisted (already released, or never a checkpoint). */
   def releasePersisted(ds: Dataset[_]): Unit =
     firstPersisted(ds.queryExecution.toRdd)
       .foreach(_.unpersist(blocking = false))
@@ -145,7 +29,7 @@ private[graft] object RoundCheckpoints {
   def persistedRddId(ds: Dataset[_]): Option[Int] =
     firstPersisted(ds.queryExecution.toRdd).map(_.id)
 
-  private def firstPersisted(r: RDD[_]): Option[RDD[_]] =
+  private[core] def firstPersisted(r: RDD[_]): Option[RDD[_]] =
     if (r.getStorageLevel != StorageLevel.NONE) Some(r)
     else r.dependencies.view.flatMap(d => firstPersisted(d.rdd)).headOption
 }

@@ -40,7 +40,7 @@ import org.apache.spark.sql.SparkSession
   * measured to zero. An eager `releasePersisted` on eviction would be
   * WRONG here: a just-evicted entry can still be referenced by an
   * in-flight query's lazy plan, and a truncated checkpoint cannot be
-  * recomputed after release. (Contrast RoundCheckpoints, whose rotate
+  * recomputed after release. (Contrast Fixpoint, whose round rotation
   * contract guarantees the previous round has no live consumers.)
   *
   * Concurrency: the registry lock covers only map access; builds run

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * data is the single winning pair), and (c) a pure-map re-segmentation of
   * the piece arrays via a left-to-right greedy fold (`aggregate` higher-
   * order function — codegen-friendly, no UDF). State is lineage-truncated
-  * per round ([[Graph.pageRank]] discipline).
+  * per round by [[graft.core.Fixpoint]].
   *
   * Determinism: ties on pair frequency break lexicographically, so the
   * learned merge table is a pure function of the word-frequency table.
@@ -75,46 +75,34 @@ object Bpe {
     *         every word collapses to a single piece first */
   def train(words: DataFrame, nMerges: Int): Seq[Merge] = {
     require(nMerges >= 1, s"train needs nMerges >= 1, got $nMerges")
-    // pieces is vocabulary-sized and re-checkpointed per merge round — a
-    // realistic 32k-merge training run would otherwise hold 32k copies in
-    // storage; rotate the blocks (graft.core.RoundCheckpoints)
-    val rc = new graft.core.RoundCheckpoints(words.sparkSession.sparkContext)
-    var pieces = rc.rotate(rc.track(words
-      .select(col("freq"),
-        filter(split(col("word"), ""), x => x =!= lit("")).as("pieces"))
-      .localCheckpoint()))
     val rules = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var rank = 1
-    // the RESULT is `rules`, not the final pieces table — releaseAll in
-    // a finally so EVERY exit (nothing-left-to-merge early return, the
-    // normal bound, and a failure in the top-pair collect, which runs
-    // OUTSIDE any rotate body and used to strand the tracked pieces
-    // table — ADVICE r12) hands the vocabulary-sized blocks back instead
-    // of stranding them on a long-lived session
-    try {
-      while (rank <= nMerges) {
-        val top = pieces
-          .select(col("freq"), explode(expr(
-            // the size guard matters: sequence(1, 0) counts DOWN in Spark,
-            // so an unguarded single-piece word would probe index 0
-            """IF(size(pieces) < 2,
-              |   CAST(array() AS ARRAY<STRUCT<l: STRING, r: STRING>>),
-              |   transform(sequence(1, size(pieces) - 1),
-              |     i -> struct(element_at(pieces, i) AS l,
-              |                 element_at(pieces, CAST(i + 1 AS INT)) AS r)))""".stripMargin)).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum("freq").as("pf"))
-          .orderBy(col("pf").desc, col("l"), col("r"))
-          .limit(1).collect()
-        if (top.isEmpty) return rules.toSeq // nothing left to merge
-        val (l, r, pf) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        rules += Merge(rank, l, r, pf)
-        pieces = rc.rotate(rc.track(pieces
-          .select(col("freq"), applyMerge(col("pieces"), l, r).as("pieces"))
-          .localCheckpoint()))
-        rank += 1
+    val pieces = graft.core.Fixpoint("Bpe.train", nMerges,
+        graft.core.Fixpoint.ReturnState, readsStateOnce = false, inputs = Nil)(
+        _ => words.select(col("freq"),
+          filter(split(col("word"), ""), x => x =!= lit("")).as("pieces"))) {
+        (pieces, r) =>
+      val top = pieces
+        .select(col("freq"), explode(expr(
+          // the size guard matters: sequence(1, 0) counts DOWN in Spark,
+          // so an unguarded single-piece word would probe index 0
+          """IF(size(pieces) < 2,
+            |   CAST(array() AS ARRAY<STRUCT<l: STRING, r: STRING>>),
+            |   transform(sequence(1, size(pieces) - 1),
+            |     i -> struct(element_at(pieces, i) AS l,
+            |                 element_at(pieces, CAST(i + 1 AS INT)) AS r)))""".stripMargin)).as("p"))
+        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+        .agg(sum("freq").as("pf"))
+        .orderBy(col("pf").desc, col("l"), col("r"))
+        .limit(1).collect()
+      if (top.isEmpty) pieces // nothing left to merge: converged
+      else {
+        val (left, right) = (top(0).getString(0), top(0).getString(1))
+        rules += Merge(r.n, left, right, top(0).getLong(2))
+        pieces.select(col("freq"), applyMerge(col("pieces"), left, right).as("pieces"))
       }
-      rules.toSeq
-    } finally rc.releaseAll()
+    }
+    // the RESULT is `rules`: hand the vocabulary-sized last table back
+    graft.core.RoundCheckpoints.releasePersisted(pieces)
+    rules.toSeq
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Fixpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,10 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: edges are deduped and degree-annotated ONCE and cached;
   * each iteration is one equi-join (edges ⋈ ranks on src) plus one
-  * aggregation (sum by dst) — the canonical distributed PageRank. Ranks
-  * are lineage-truncated per round (`localCheckpoint`): an iterative
-  * fixpoint that re-plans its whole history doubles the plan each round
-  * and eventually OOMs the planner (the NearDup.clusters lesson).
+  * aggregation (sum by dst) — the canonical distributed PageRank. Every
+  * loop here runs on [[graft.core.Fixpoint]], which lineage-truncates the
+  * state per round (or, for ≤ 8 rounds of a step that reads its state
+  * once, evaluates the unrolled chain with one action).
   *
   * Nodes with no outgoing edge contribute nothing (standard simplified
   * dangling handling); nodes with no incoming edge keep the base mass
@@ -33,19 +34,9 @@ object Graph {
   /** @param edges two columns `src`, `dst` (any duplicate edges are
     *              collapsed — multi-edges would double-count mass)
     * @return `node`, `rank_micro` for every node incident to an edge */
-  def pageRank(edges: DataFrame, iters: Int, initMicro: Long = 1000000L): DataFrame = {
-    // materialize the deduped edge list ONCE: deg, annotated, and nodes all
-    // branch from it, and without truncation every branch re-runs the whole
-    // upstream edge derivation (at sf0.1 that re-ran a lineitem-join scan
-    // per iteration — 9 s instead of ~2)
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    // released on EVERY exit (ADVICE r12: a throw inside the prepared
-    // loop must not strand an edge-sized table on a long-lived session).
-    // On the normal path the result is already checkpointed (truncated
-    // lineage), so the finally never releases a recovery source.
-    try pageRankPrepared(e, iters, initMicro)
-    finally graft.core.RoundCheckpoints.releasePersisted(e)
-  }
+  def pageRank(edges: DataFrame, iters: Int, initMicro: Long = 1000000L): DataFrame =
+    pageRankOn(edges.select(col("src"), col("dst")).distinct(), iters,
+      initMicro, owned = true)
 
   /** [[pageRank]] over an edge table the CALLER has already deduped and
     * materialized — the entry point for pipelines running several graph
@@ -56,111 +47,38 @@ object Graph {
     * materialized (checkpointed/cached) — this method scans it many times
     * and does NOT truncate its lineage. */
   def pageRankPrepared(e: DataFrame, iters: Int,
-      initMicro: Long = 1000000L): DataFrame = {
+      initMicro: Long = 1000000L): DataFrame =
+    pageRankOn(e, iters, initMicro, owned = false)
+
+  private def pageRankOn(edges: DataFrame, iters: Int, initMicro: Long,
+      owned: Boolean): DataFrame = {
     require(iters >= 1, s"pageRank needs >= 1 iteration, got $iters")
-    if (iters <= unrolledIters) return pageRankUnrolled(e, iters, initMicro)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val annotated = e.join(deg, "src").cache()
-    // the method's own materializations are released on EVERY exit
-    // (ADVICE r12): rc.rotate already releases round state when a body
-    // throws, but `annotated` and `nodes` live OUTSIDE the rotation and
-    // a mid-loop failure stranded them on a long-lived session
-    var nodes: DataFrame = null
-    var rc: graft.core.RoundCheckpoints = null
-    try {
-      // force the loop-invariant cache NOW: every iteration reads it hot and
-      // its build cost lands here, not inside round 1's timing (rotation
-      // tracks checkpoints EXACTLY, so an untracked lazy cache is never at
-      // risk of being swept — this count is a locality choice, not a guard)
-      annotated.count()
-      nodes = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node"))).distinct()
-        .localCheckpoint()
-
-      // rank is node-sized and re-checkpointed every iteration — rotate the
-      // blocks (graft.core.RoundCheckpoints) or a 20-iteration run holds 20
-      // node tables in storage, the kCore defect one size class down
-      rc = new graft.core.RoundCheckpoints(e.sparkSession.sparkContext)
-      var rank = rc.rotate(rc.track(
-        nodes.withColumn("rank_micro", lit(initMicro)).localCheckpoint()))
-      for (_ <- 1 to iters) rank = rc.rotate {
-        val contrib = annotated
-          .join(rank, annotated("src") === rank("node"))
-          .selectExpr("dst AS node", "rank_micro div outdeg AS c")
-        val stepped = contrib
-          .groupBy("node")
-          .agg(expr("150000 + (850 * sum(c)) div 1000").as("rank_micro"))
-        // no-incoming-edge nodes keep base mass; in a symmetrized graph
-        // this join is a no-op but the operator must not drop nodes
-        rc.track(nodes
-          .join(stepped, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("rank_micro"), lit(150000L)).as("rank_micro"))
-          .localCheckpoint())
-      }
-      // rank (the result) stays tracked in rc — the last round's blocks
-      // ARE the result and are never released on the normal path
-      rank
-    } catch {
-      case t: Throwable =>
-        if (rc != null) rc.releaseAll()
-        throw t
-    } finally {
-      annotated.unpersist()
-      // rank (the result) is checkpointed on the normal path — the
-      // internal node table's blocks are recovery source for nothing
-      if (nodes != null) graft.core.RoundCheckpoints.releasePersisted(nodes)
-    }
-  }
-
-  /** Iteration bound under which the bulk-iterative loops run UNROLLED —
-    * one lazy plan, ONE driver action — instead of localCheckpointing
-    * every round. The per-round checkpoint exists to stop plan depth
-    * growing without bound (each round re-planning its whole history
-    * eventually OOMs the planner); at ≤ 8 rounds the unrolled plan is a
-    * shallow linear chain, and skipping the checkpoints removes one
-    * driver action + one node-sized block-store materialization PER
-    * ROUND (guide §5: the driver does no data work, and a bench-visible
-    * fraction of small-graph round cost is job-submission latency, not
-    * compute — the r14/r15 iterative-family finding). Only loops whose
-    * round plan references the previous state EXACTLY ONCE qualify
-    * (pageRank's contrib join, labelPropagation's vote join): BFS /
-    * weighted relaxation reference `reached`/`dist` 2-3 times per round,
-    * so their unrolled plans would duplicate the state subtree
-    * exponentially — they keep the checkpoint discipline. */
-  private val unrolledIters = 8
-
-  /** [[pageRankPrepared]]'s ≤ [[unrolledIters]] fast path: the rank
-    * recurrence as one lazy plan. The loop-invariant tables (annotated
-    * edges, node set) are `cache()`d — within the single job Spark
-    * materializes them at first use and every later round reads the
-    * cached blocks — and released after the final checkpoint. The result
-    * is localCheckpointed exactly like the loop path (callers may
-    * release the shared edge memo once this returns). */
-  private def pageRankUnrolled(e: DataFrame, iters: Int,
-      initMicro: Long): DataFrame = {
+    // the one-arg wrappers own and materialize their deduped edges (deg,
+    // annotated and nodes all branch from them; without truncation every
+    // branch re-runs the upstream edge derivation — at sf0.1 a
+    // lineitem-join scan per iteration); Fixpoint releases them on exit
+    val e = if (owned) edges.localCheckpoint() else edges
+    // loop-invariant tables, read every round: Spark materializes each at
+    // its first use and every later round reads the cached blocks
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val annotated = e.join(deg, "src").cache()
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct().cache()
-    try {
-      var rank = nodes.withColumn("rank_micro", lit(initMicro))
-      for (_ <- 1 to iters) {
-        val contrib = annotated
-          .join(rank, annotated("src") === rank("node"))
-          .selectExpr("dst AS node", "rank_micro div outdeg AS c")
-        val stepped = contrib
-          .groupBy("node")
-          .agg(expr("150000 + (850 * sum(c)) div 1000").as("rank_micro"))
-        rank = nodes
-          .join(stepped, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("rank_micro"), lit(150000L)).as("rank_micro"))
-      }
-      rank.localCheckpoint() // the ONE action: evaluates the whole chain
-    } finally {
-      annotated.unpersist()
-      nodes.unpersist()
+    Fixpoint("pageRank", iters, Fixpoint.ReturnState, readsStateOnce = true,
+        inputs = Seq(annotated, nodes) ++ (if (owned) Seq(e) else Nil))(
+        _ => nodes.withColumn("rank_micro", lit(initMicro))) { (rank, _) =>
+      val contrib = annotated
+        .join(rank, annotated("src") === rank("node"))
+        .selectExpr("dst AS node", "rank_micro div outdeg AS c")
+      val stepped = contrib
+        .groupBy("node")
+        .agg(expr("150000 + (850 * sum(c)) div 1000").as("rank_micro"))
+      // no-incoming-edge nodes keep base mass; in a symmetrized graph
+      // this join is a no-op but the operator must not drop nodes
+      nodes
+        .join(stepped, Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("rank_micro"), lit(150000L)).as("rank_micro"))
     }
   }
 
@@ -272,59 +190,35 @@ object Graph {
     *              undirected reachability)
     * @param seeds one column `node`, distance-0 sources
     * @return (node, dist) for every node within `maxHops` of any seed */
-  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    // `reached` (the result) is checkpointed on the normal path — release
-    // the owned edge materialization on EVERY exit instead of stranding
-    // it when the prepared loop throws (pageRank's discipline, ADVICE r12)
-    try bfsDistancesPrepared(e, seeds, maxHops)
-    finally graft.core.RoundCheckpoints.releasePersisted(e)
-  }
+  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
+    bfsDistancesOn(edges.select(col("src"), col("dst")).distinct(), seeds,
+      maxHops, owned = true)
 
   /** [[bfsDistances]] over a caller-deduped, caller-materialized edge
     * table (the [[pageRankPrepared]] contract — q81/q86 share one trade
     * graph this way). */
   def bfsDistancesPrepared(e: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame = {
+      maxHops: Int): DataFrame =
+    bfsDistancesOn(e, seeds, maxHops, owned = false)
+
+  private def bfsDistancesOn(edges: DataFrame, seeds: DataFrame,
+      maxHops: Int, owned: Boolean): DataFrame = {
     require(maxHops >= 0, s"bfsDistances needs maxHops >= 0, got $maxHops")
-    // frontier + reached are re-checkpointed every hop — rotate the blocks
-    // (graft.core.RoundCheckpoints) so a deep traversal holds two hops of
-    // state, not maxHops of them
-    val rc = new graft.core.RoundCheckpoints(e.sparkSession.sparkContext)
+    val e = if (owned) edges.localCheckpoint() else edges
     // ONE driver action per hop (r14): the frontier is definitionally
-    // reached.filter(dist == hop), so it needs no checkpoint of its own —
-    // and the frontier-emptiness test rides the reached checkpoint as an
-    // observed metric instead of a separate isEmpty job. 3 actions/hop
-    // (frontier ckpt, reached ckpt, isEmpty) collapse to 1; at scale this
-    // also removes a frontier-sized materialization per hop.
-    var frontierRows = 0L
-    var reached: DataFrame = rc.rotate {
-      val obs = new org.apache.spark.sql.Observation
-      val r0 = rc.track(seeds.select(col("node")).distinct()
-        .withColumn("dist", lit(0))
-        .observe(obs, coalesce(count(lit(1)), lit(0L)).as("f"))
-        .localCheckpoint())
-      frontierRows = obs.get("f").asInstanceOf[Long]
-      r0
+    // reached.filter(dist == hop), so it needs no checkpoint of its own,
+    // and an empty frontier is observed on the reached checkpoint
+    Fixpoint("bfsDistances", maxHops, Fixpoint.ReturnState,
+        readsStateOnce = false, inputs = (if (owned) Seq(e) else Nil))(
+        r0 => r0.untilNone(seeds.select(col("node")).distinct()
+          .withColumn("dist", lit(0)), lit(true))) { (reached, r) =>
+      val frontier = reached.filter(col("dist") === r.n - 1).select(col("node"))
+      val next = e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+        .select(col("dst").as("node")).distinct()
+        .join(reached, Seq("node"), "left_anti")
+        .withColumn("dist", lit(r.n))
+      r.untilNone(reached.unionByName(next), col("dist") === r.n)
     }
-    var hop = 0
-    while (hop < maxHops && frontierRows > 0) {
-      hop += 1
-      rc.rotate {
-        val frontier = reached.filter(col("dist") === hop - 1).select(col("node"))
-        val next = e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-          .select(col("dst").as("node")).distinct()
-          .join(reached, Seq("node"), "left_anti")
-          .withColumn("dist", lit(hop))
-        val obs = new org.apache.spark.sql.Observation
-        reached = rc.track(reached.unionByName(next)
-          .observe(obs, coalesce(sum(when(col("dist") === hop, 1L)
-            .otherwise(0L)), lit(0L)).as("f"))
-          .localCheckpoint())
-        frontierRows = obs.get("f").asInstanceOf[Long]
-      }
-    }
-    reached
   }
 
   /** Hop-bounded single/multi-source shortest paths over non-negative
@@ -348,73 +242,53 @@ object Graph {
     * @param maxRounds max path length in edges
     * @return (node, dist): cheapest ≤ maxRounds-edge path from any seed */
   def weightedDistances(edges: DataFrame, seeds: DataFrame,
-      maxRounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .groupBy("src", "dst").agg(min("w").as("w")).localCheckpoint()
-    // `dist` (the result) is checkpointed on the normal path — release
-    // the owned edge materialization on EVERY exit instead of stranding
-    // it when the prepared loop throws (pageRank's discipline, ADVICE r12)
-    try weightedDistancesPrepared(e, seeds, maxRounds)
-    finally graft.core.RoundCheckpoints.releasePersisted(e)
-  }
+      maxRounds: Int): DataFrame =
+    weightedDistancesOn(edges.select(col("src"), col("dst"), col("w"))
+      .groupBy("src", "dst").agg(min("w").as("w")), seeds, maxRounds,
+      owned = true)
 
   /** [[weightedDistances]] over a caller-deduped, caller-materialized
     * (src, dst, w) table (the [[pageRankPrepared]] contract). */
   def weightedDistancesPrepared(e: DataFrame, seeds: DataFrame,
-      maxRounds: Int): DataFrame = {
+      maxRounds: Int): DataFrame =
+    weightedDistancesOn(e, seeds, maxRounds, owned = false)
+
+  private def weightedDistancesOn(edges: DataFrame, seeds: DataFrame,
+      maxRounds: Int, owned: Boolean): DataFrame = {
     require(maxRounds >= 0, s"weightedDistances needs maxRounds >= 0, got $maxRounds")
-    // dist + improved are re-checkpointed every round — rotate the blocks
-    // (graft.core.RoundCheckpoints; the bfsDistancesPrepared discipline)
-    val rc = new graft.core.RoundCheckpoints(e.sparkSession.sparkContext)
-    // ONE driver action per round (r14, the bfsDistancesPrepared fold):
-    // `__r` stamps the round a node's distance last improved, so the
-    // improved frontier is dist.filter(__r == round) — no separate
-    // improved-set checkpoint — and convergence (no improvement) is an
-    // observed metric on the dist checkpoint, not an isEmpty job.
-    // 3 actions/round collapse to 1.
-    var frontierRows = 0L
-    var dist = rc.rotate {
-      val obs = new org.apache.spark.sql.Observation
-      val d0 = rc.track(seeds.select(col("node")).distinct()
-        .withColumn("dist", lit(0L)).withColumn("__r", lit(0))
-        .observe(obs, coalesce(count(lit(1)), lit(0L)).as("f"))
-        .localCheckpoint())
-      frontierRows = obs.get("f").asInstanceOf[Long]
-      d0
-    }
-    var round = 0
-    while (round < maxRounds && frontierRows > 0) {
-      round += 1
-      rc.rotate {
-        val frontier = dist.filter(col("__r") === round - 1)
-        // cheapest offer per neighbor from the improved set only
-        val offers = e
-          .join(frontier.select(col("node").as("src"), col("dist").as("sd")),
-            Seq("src"))
-          .select(col("dst").as("node"), (col("sd") + col("w")).as("cand"))
-          .groupBy("node").agg(min("cand").as("cand"))
-        // ONE full-outer join replaces the left-join + anti-join-union
-        // pair (r15, measured on q127's job decomposition: the offers
-        // subtree — the round's expensive edges⋈frontier aggregate — was
-        // referenced TWICE in the update plan and Spark computed it twice
-        // per round, doubling every round's jobs). Row-for-row identical:
-        // dist-only rows keep (dist, __r), matched rows take the cheaper
-        // of (dist, cand), offers-only rows are the newly reached nodes.
-        val improved = col("cand").isNotNull &&
-          (col("dist").isNull || col("cand") < col("dist"))
-        val obs = new org.apache.spark.sql.Observation
-        dist = rc.track(dist
-          .join(offers, Seq("node"), "full")
-          .select(col("node"),
-            when(improved, col("cand")).otherwise(col("dist")).as("dist"),
-            when(improved, lit(round)).otherwise(col("__r")).as("__r"))
-          .observe(obs, coalesce(sum(when(col("__r") === round, 1L)
-            .otherwise(0L)), lit(0L)).as("f"))
-          .localCheckpoint())
-        frontierRows = obs.get("f").asInstanceOf[Long]
-      }
-    }
-    dist.select(col("node"), col("dist"))
+    val e = if (owned) edges.localCheckpoint() else edges
+    // ONE driver action per round (r14, the bfsDistances fold): `__r`
+    // stamps the round a node's distance last improved, so the improved
+    // frontier is dist.filter(__r == round) — no separate improved-set
+    // checkpoint — and "no improvement" is observed on the dist checkpoint
+    Fixpoint("weightedDistances", maxRounds, Fixpoint.ReturnState,
+        readsStateOnce = false, inputs = (if (owned) Seq(e) else Nil))(
+        r0 => r0.untilNone(seeds.select(col("node")).distinct()
+          .withColumn("dist", lit(0L)).withColumn("__r", lit(0)),
+          lit(true))) { (dist, r) =>
+      val frontier = dist.filter(col("__r") === r.n - 1)
+      // cheapest offer per neighbor from the improved set only
+      val offers = e
+        .join(frontier.select(col("node").as("src"), col("dist").as("sd")),
+          Seq("src"))
+        .select(col("dst").as("node"), (col("sd") + col("w")).as("cand"))
+        .groupBy("node").agg(min("cand").as("cand"))
+      // ONE full-outer join replaces the left-join + anti-join-union
+      // pair (r15, measured on q127's job decomposition: the offers
+      // subtree — the round's expensive edges⋈frontier aggregate — was
+      // referenced TWICE in the update plan and Spark computed it twice
+      // per round, doubling every round's jobs). Row-for-row identical:
+      // dist-only rows keep (dist, __r), matched rows take the cheaper
+      // of (dist, cand), offers-only rows are the newly reached nodes.
+      val improved = col("cand").isNotNull &&
+        (col("dist").isNull || col("cand") < col("dist"))
+      r.untilNone(dist
+        .join(offers, Seq("node"), "full")
+        .select(col("node"),
+          when(improved, col("cand")).otherwise(col("dist")).as("dist"),
+          when(improved, lit(r.n)).otherwise(col("__r")).as("__r")),
+        col("__r") === r.n)
+    }.select(col("node"), col("dist"))
   }
 
   /** k-core decomposition by iterative peeling: drop every node with
@@ -437,87 +311,57 @@ object Graph {
     * @return (node, core_deg) — every k-core member with its degree
     *         inside the core (≥ k by construction) */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame =
-    {
-      val canon = canonicalUndirected(edges).localCheckpoint()
-      // `deg` (the result) is checkpointed on the normal path — release
-      // the owned canon materialization on EVERY exit instead of
-      // stranding it when kCoreCanonical throws (its maxRounds
-      // IllegalStateException is a REAL exit path, not a can't-happen —
-      // ADVICE r12)
-      try kCoreCanonical(canon, k, maxRounds)
-      finally graft.core.RoundCheckpoints.releasePersisted(canon)
-    }
+    kCoreOn(canonicalUndirected(edges), k, maxRounds, owned = true)
 
   /** [[kCore]] over a pre-canonicalized, pre-materialized edge table
     * (the [[triangleCountsCanonical]] contract, plus materialization —
     * every round scans it once).
     *
-    * Round state is NODE-sized, never edge-sized: each round recomputes
-    * surviving degrees by anti-joining the ONE upstream edge
-    * materialization against the cumulative dropped-node set, instead of
-    * re-materializing the shrunken edge table. The previous version
-    * localCheckpointed the edge set EVERY round, which accumulates
-    * O(rounds × |E|) storage blocks — at sf10 (≈90 M edges × 11 peel
-    * rounds) that filled a 32 GB driver's storage space and GC-thrashed
-    * the JVM into RPC-timeout shutdown (round-11 GR leg, exit 56). Now
-    * the only edge-sized storage is the caller's canon materialization;
-    * per-round checkpoints (degree table, dropped set) are node-sized and
-    * the PREVIOUS round's blocks are released as soon as the new round's
-    * are materialized, so peak storage is canon + 2 node tables at any
-    * depth — the shape that survives a 1000-executor 100 TB graph. */
-  def kCoreCanonical(canon: DataFrame, k: Int, maxRounds: Int): DataFrame = {
+    * Round state is NODE-sized, never edge-sized: one row per node of the
+    * surviving graph with its degree there, plus one row with a NULL
+    * degree per node already peeled. Each round recomputes surviving
+    * degrees by anti-joining the ONE upstream edge materialization
+    * against the peeled set (null or < k), instead of re-materializing
+    * the shrunken edge table. Localcheckpointing the edge set EVERY round
+    * accumulated O(rounds × |E|) storage blocks — at sf10 (≈90 M edges ×
+    * 11 peel rounds) that filled a 32 GB driver's storage space and
+    * GC-thrashed the JVM into RPC-timeout shutdown (round-11 GR leg, exit
+    * 56). Now the only edge-sized storage is the canon materialization,
+    * so peak storage is canon + 2 node tables at any depth.
+    *
+    * Round 0 is the first degree pass, so the loop runs at most
+    * `maxRounds - 1` peel rounds after it. */
+  def kCoreCanonical(canon: DataFrame, k: Int, maxRounds: Int): DataFrame =
+    kCoreOn(canon, k, maxRounds, owned = false)
+
+  private def kCoreOn(edges: DataFrame, k: Int, maxRounds: Int,
+      owned: Boolean): DataFrame = {
     require(k >= 1, s"kCore needs k >= 1, got $k")
     require(maxRounds >= 1, s"kCore needs maxRounds >= 1, got $maxRounds")
-    val sc = canon.sparkSession.sparkContext
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("a").as("node"))
+    val canon = if (owned) edges.localCheckpoint() else edges
+    // an empty drop set IS convergence, with the degree table in hand
+    def degrees(r: Fixpoint.Round, e: DataFrame): DataFrame =
+      r.untilNone(e.select(col("a").as("node"))
         .unionByName(e.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("core_deg"))
-    // release the node-sized checkpoints of round r-1 once round r's are
-    // materialized (localCheckpoint persists at the RDD layer, which
-    // Dataset.unpersist cannot reach — graft.core.RoundCheckpoints tracks
-    // each round's eager checkpoints exactly and unpersists the previous
-    // round's; concurrent statements on the same session are untouched)
-    val rc = new graft.core.RoundCheckpoints(sc)
-    var removed: DataFrame = null
-    var round = 0
-    while (round < maxRounds) {
-      round += 1
+        .groupBy("node").agg(count(lit(1)).as("core_deg")),
+        col("core_deg") < k)
+    Fixpoint("kCore", maxRounds - 1,
+        Fixpoint.Fail(s"kCore did not converge within $maxRounds rounds"),
+        readsStateOnce = false, inputs = (if (owned) Seq(canon) else Nil))(
+        r0 => degrees(r0, canon)) { (state, r) =>
       // peel against the DROP set, not the keep set: after the first round
       // the overwhelming majority of nodes survive, so the anti-join's
       // build side is the small complement (broadcast hash anti) instead
-      // of a node-sized semi-join build — and an empty drop set IS the
-      // convergence signal, with the degree table already in hand as the
-      // result
-      val result = rc.rotate {
-        val live =
-          if (removed == null) canon
-          else canon
-            .join(removed.select(col("node").as("a")), Seq("a"), "left_anti")
-            .join(removed.select(col("node").as("b")), Seq("b"), "left_anti")
-        // drop-set emptiness observed ON the degree checkpoint (r14) —
-        // the isEmpty probe was a second driver action every round
-        val obs = new org.apache.spark.sql.Observation
-        val deg = rc.track(degrees(live)
-          .observe(obs, coalesce(sum(when(col("core_deg") < k, 1L)
-            .otherwise(0L)), lit(0L)).as("d"))
-          .localCheckpoint())
-        val drop = deg.filter(col("core_deg") < k).select(col("node"))
-        if (obs.get("d").asInstanceOf[Long] == 0L)
-          Some(deg) // converged: deg is the caller's result
-        else {
-          removed = rc.track((if (removed == null) drop
-            else removed.unionByName(drop)).localCheckpoint())
-          None
-        }
-      }
-      if (result.isDefined) return result.get
-    }
-    // failure path: the last round's node-sized blocks will never be
-    // consumed — don't strand them on a long-lived driver (ADVICE r11)
-    rc.releaseAll()
-    throw new IllegalStateException(
-      s"kCore did not converge within $maxRounds rounds")
+      // of a node-sized semi-join build
+      val removed = state
+        .filter(col("core_deg").isNull || col("core_deg") < k)
+        .select(col("node"))
+      val live = canon
+        .join(removed.select(col("node").as("a")), Seq("a"), "left_anti")
+        .join(removed.select(col("node").as("b")), Seq("b"), "left_anti")
+      degrees(r, live)
+        .unionByName(removed.withColumn("core_deg", lit(null).cast("long")))
+    }.filter(col("core_deg").isNotNull)
   }
 
   /** Synchronous label propagation (Raghavan, Albert & Kumara 2007) —
@@ -541,8 +385,7 @@ object Graph {
     * Scale shape: per round ONE equi-join (edges ⋈ labels on the
     * neighbour end, both sides hash-partitioned on the join key), one
     * map-side-combinable count aggregate, and one per-node window argmax
-    * (partitioned by node — no global window). Labels are
-    * lineage-truncated per round (the [[pageRank]] discipline).
+    * (partitioned by node — no global window).
     *
     * @param canon distinct canonical undirected edges `(a, b)`, a < b
     *              ([[canonicalUndirected]]'s contract), already
@@ -551,63 +394,22 @@ object Graph {
     *         is a node id in the same community */
   def labelPropagation(canon: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"labelPropagation needs rounds >= 1, got $rounds")
-    if (rounds <= unrolledIters) return labelPropagationUnrolled(canon, rounds)
-    val e = canon.select(col("a").as("n"), col("b").as("m"))
-      .unionByName(canon.select(col("b").as("n"), col("a").as("m")))
-      .localCheckpoint()
-    // labels are re-checkpointed every round — rotate the blocks
-    // (graft.core.RoundCheckpoints; the pageRankPrepared discipline)
-    val rc = new graft.core.RoundCheckpoints(canon.sparkSession.sparkContext)
-    try {
-      var labels = rc.rotate(rc.track(e.select(col("n")).distinct()
-        .select(col("n"), col("n").as("label"))
-        .localCheckpoint()))
-      val byVotes = Window.partitionBy(col("n"))
-        .orderBy(col("c").desc, col("label"))
-      for (_ <- 1 to rounds) labels = rc.rotate {
-        rc.track(e.join(labels.select(col("n").as("m"), col("label")), "m")
-          .groupBy(col("n"), col("label")).agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(byVotes))
-          .filter(col("rn") === 1)
-          .select(col("n"), col("label"))
-          .localCheckpoint())
-      }
-      labels
-    } catch {
-      case t: Throwable => rc.releaseAll(); throw t
-    } finally {
-      // labels (the result) is checkpointed on the normal path — release
-      // the owned symmetrized edge materialization on EVERY exit instead
-      // of stranding it (pageRank's discipline, ADVICE r12)
-      graft.core.RoundCheckpoints.releasePersisted(e)
-    }
-  }
-
-  /** [[labelPropagation]]'s ≤ [[unrolledIters]] fast path (see
-    * [[pageRankUnrolled]]): each round's vote join references the
-    * previous labels exactly once, so the unrolled plan is a shallow
-    * linear chain evaluated by ONE action (the final localCheckpoint,
-    * matching the loop path's materialized-result contract). The
-    * symmetrized edge list is `cache()`d (read once per round plus the
-    * label init) and released after that action. */
-  private def labelPropagationUnrolled(canon: DataFrame,
-      rounds: Int): DataFrame = {
+    // symmetrized edges, read by the label init and once per round
     val e = canon.select(col("a").as("n"), col("b").as("m"))
       .unionByName(canon.select(col("b").as("n"), col("a").as("m")))
       .cache()
-    try {
-      var labels = e.select(col("n")).distinct()
-        .select(col("n"), col("n").as("label"))
-      val byVotes = Window.partitionBy(col("n"))
-        .orderBy(col("c").desc, col("label"))
-      for (_ <- 1 to rounds) labels =
-        e.join(labels.select(col("n").as("m"), col("label")), "m")
-          .groupBy(col("n"), col("label")).agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(byVotes))
-          .filter(col("rn") === 1)
-          .select(col("n"), col("label"))
-      labels.localCheckpoint() // the ONE action: evaluates the whole chain
-    } finally e.unpersist()
+    val byVotes = Window.partitionBy(col("n"))
+      .orderBy(col("c").desc, col("label"))
+    Fixpoint("labelPropagation", rounds, Fixpoint.ReturnState,
+        readsStateOnce = true, inputs = Seq(e))(
+        _ => e.select(col("n")).distinct()
+          .select(col("n"), col("n").as("label"))) { (labels, _) =>
+      e.join(labels.select(col("n").as("m"), col("label")), "m")
+        .groupBy(col("n"), col("label")).agg(count(lit(1)).as("c"))
+        .withColumn("rn", row_number().over(byVotes))
+        .filter(col("rn") === 1)
+        .select(col("n"), col("label"))
+    }
   }
 
   /** Local clustering coefficient (Watts & Strogatz 1998): the fraction

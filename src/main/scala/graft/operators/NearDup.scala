@@ -135,11 +135,11 @@ object NearDup {
     * label (lab(n) ← lab(lab(n))) — so the distance a minimum travels
     * DOUBLES per round and convergence is O(log diameter) rounds, not
     * O(diameter). Each round is two joins + a hash aggregate over
-    * (node, label) pairs — linear state, cache-swapped. Rounds run until
-    * a fixpoint (cheap emptiness probe per round); if `maxIter` rounds
-    * (default 12 ⇒ diameter ≈ 2¹²) don't converge the call FAILS rather
-    * than silently returning partial labels. The same bounded-fixpoint
-    * discipline as [[TreeRollup]] (SURVEY §2.5 A2).
+    * (node, label) pairs — linear state, one [[graft.core.Fixpoint]]
+    * checkpoint per round. Rounds run until no label changes (observed on
+    * that checkpoint); if `maxIter` rounds (default 12 ⇒ diameter ≈ 2¹²)
+    * don't converge the call FAILS rather than silently returning partial
+    * labels. The same bounded fixpoint as [[TreeRollup]] (SURVEY §2.5 A2).
     *
     * @param pairs (doc_a, doc_b) near-dup pairs (any extra columns ignored)
     * @return (doc_id, rep_id) for every doc appearing in a pair
@@ -156,91 +156,47 @@ object NearDup {
     val edges = pairs.select(col("doc_a").as("n"), col("doc_b").as("m"))
       .unionByName(pairs.select(col("doc_b").as("n"), col("doc_a").as("m")))
       .cache()
-    var lab = edges.groupBy(col("n"))
-      .agg(least(min(col("m")), first(col("n"))).as("lab"))
-      .cache()
-    // force the loop-invariant caches NOW: every round reads them and
-    // their build cost should land here, not inside round 1. ONE action
-    // suffices (r14): computing lab streams the pairs DAG through edges
-    // exactly once, populating edges' cache blocks en route — the
-    // previous separate edges.count() was a second driver round-trip for
-    // the same blocks. Rotation tracks checkpoints EXACTLY, so an
-    // untracked lazy cache can no longer be swept.
-    lab.count()
-    // per-round localCheckpoint blocks live at the RDD layer, which the
-    // Dataset.unpersist below cannot reach — rotate them
-    // (graft.core.RoundCheckpoints) or the loop accumulates one node-sized
-    // block per round, the kCore storage defect in miniature
-    val rc = new graft.core.RoundCheckpoints(pairs.sparkSession.sparkContext)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      rc.rotate {
-        // one-hop neighbour-min + join-back-to-self, NOT a self-unioned
-        // single aggregate: the union form (min over self ∪ neighbours in
-        // one agg, __old as max over a self-only column) was probed r15
-        // and REJECTED — q159 1.28→1.40 s, q122 flat (the self rows widen
-        // the aggregate exchange and its combiner state for no saved
-        // exchange; the hop join below is AQE-broadcast-cheap).
-        val viaNeighbor = edges
-          .join(lab.withColumnRenamed("n", "m"), Seq("m"))
-          .groupBy(col("n")).agg(min(col("lab")).as("nlab"))
-        // cache the one-hop result: the pointer-jump self-join reads it from
-        // BOTH sides — uncached, the edges join + aggregate would run twice.
-        // `__old` (the round-entry label) rides along so convergence can be
-        // read off the checkpoint action itself (below) instead of a
-        // separate next ⋈ lab job per round (r14: the convergence join was
-        // a full extra action in every round of every cluster consumer —
-        // q48/q122/q129/q159/q163).
-        val hop = lab.join(viaNeighbor, Seq("n"))
-          .select(col("n"), col("lab").as("__old"),
-            least(col("lab"), col("nlab")).as("lab"))
-          .cache()
-        // pointer jump: follow the label one more step (labels are nodes too).
-        // localCheckpoint (eager) TRUNCATES LINEAGE: the self-join references
-        // hop twice, so without truncation the logical plan doubles per round
-        // and planning itself blows up exponentially (the classic iterative-
-        // algorithm failure; same discipline as GraphX's periodic checkpoint)
-        // Convergence = no label strictly decreased this round (labels are
-        // monotonically non-increasing under least/min), observed ON the
-        // checkpoint job — exact, and one driver action per round total.
-        // (r15 negative probe: an adaptive SECOND jump per round — lab ←
-        // lab(lab(lab)) from round 3 on — left q122's round count at 6.
-        // The rounds are HOP-limited: labels here are component-min ids,
-        // not parent pointers, so label chains are already short and extra
-        // jumps have nothing to shortcut. Round-count reduction needs
-        // edge contraction (large-star/small-star), not more jumps.)
-        val obs = new org.apache.spark.sql.Observation
-        val next = rc.track(hop.as("x")
-          .join(hop.select(col("n").as("lab"), col("lab").as("lab2")).as("y"),
-            Seq("lab"), "left")
-          .select(col("n"), col("__old"),
-            least(col("lab"), coalesce(col("lab2"), col("lab"))).as("lab"))
-          .observe(obs, coalesce(sum(when(col("lab") < col("__old"), 1L)
-            .otherwise(0L)), lit(0L)).as("chg"))
-          .select(col("n"), col("lab"))
-          .localCheckpoint())
-        converged = obs.get("chg").asInstanceOf[Long] == 0L
-        hop.unpersist()
-        lab.unpersist() // round 0's cache; later rounds' blocks rotate out
-        lab = next
-      }
-      i += 1
-    }
-    edges.unpersist()
-    // round-count evidence (stderr, one line per fixpoint): the loop's
-    // wall time is rounds × (stage waves + checkpoint), so any round-count
-    // optimization must show HERE, not in noisy wall-clock alone
-    System.err.println(s"[cc] clusters fixpoint: rounds=$i converged=$converged")
-    if (!converged) {
-      // failure path: the final round's blocks will never be consumed —
-      // don't strand them on a long-lived driver (ADVICE r11)
-      rc.releaseAll()
-      throw new IllegalStateException(
-        s"NearDup.clusters did not converge in $maxIter rounds " +
-          "(cluster diameter > 2^maxIter?) — raise maxIter")
-    }
-    lab.select(col("n").as("doc_id"), col("lab").as("rep_id"))
+    graft.core.Fixpoint("NearDup.clusters", maxIter,
+        graft.core.Fixpoint.Fail(s"NearDup.clusters did not converge in " +
+          s"$maxIter rounds (cluster diameter > 2^maxIter?) — raise maxIter"),
+        readsStateOnce = false, inputs = Seq(edges))(
+        // round 0 streams the pairs DAG through `edges` once, populating
+        // its cache blocks en route
+        _ => edges.groupBy(col("n"))
+          .agg(least(min(col("m")), first(col("n"))).as("lab"))) { (lab, r) =>
+      // one-hop neighbour-min + join-back-to-self, NOT a self-unioned
+      // single aggregate: the union form (min over self ∪ neighbours in
+      // one agg, __old as max over a self-only column) was probed r15
+      // and REJECTED — q159 1.28→1.40 s, q122 flat (the self rows widen
+      // the aggregate exchange and its combiner state for no saved
+      // exchange; the hop join below is AQE-broadcast-cheap).
+      val viaNeighbor = edges
+        .join(lab.withColumnRenamed("n", "m"), Seq("m"))
+        .groupBy(col("n")).agg(min(col("lab")).as("nlab"))
+      // cache the one-hop result: the pointer-jump self-join reads it from
+      // BOTH sides — uncached, the edges join + aggregate would run twice.
+      // `__old` (the round-entry label) rides along so convergence is read
+      // off the round's checkpoint instead of a separate next ⋈ lab job.
+      val hop = r.cache(lab.join(viaNeighbor, Seq("n"))
+        .select(col("n"), col("lab").as("__old"),
+          least(col("lab"), col("nlab")).as("lab")))
+      // pointer jump: follow the label one more step (labels are nodes
+      // too). Convergence = no label strictly decreased this round (labels
+      // are monotonically non-increasing under least/min) — exact.
+      // (r15 negative probe: an adaptive SECOND jump per round — lab ←
+      // lab(lab(lab)) from round 3 on — left q122's round count at 6.
+      // The rounds are HOP-limited: labels here are component-min ids,
+      // not parent pointers, so label chains are already short and extra
+      // jumps have nothing to shortcut. Round-count reduction needs
+      // edge contraction (large-star/small-star), not more jumps.)
+      r.untilNone(hop.as("x")
+        .join(hop.select(col("n").as("lab"), col("lab").as("lab2")).as("y"),
+          Seq("lab"), "left")
+        .select(col("n"), col("__old"),
+          least(col("lab"), coalesce(col("lab2"), col("lab"))).as("lab")),
+        col("lab") < col("__old"))
+        .select(col("n"), col("lab"))
+    }.select(col("n").as("doc_id"), col("lab").as("rep_id"))
   }
 
   /** The curation ACTION the detection machinery exists for: dedup a

@@ -40,26 +40,16 @@ object TreeRollup {
       .filter($"parentId".isNotNull && $"parentId" =!= "na")
     val parentsWithChildren = edges.select($"parentId".as("id")).distinct()
 
-    // the per-round `resolved` checkpoints rotate (graft.core
-    // .RoundCheckpoints): without release a deep tree holds every round's
-    // node-sized table in storage at once. `resolvedNew` deliberately uses
-    // cache() instead — it lives only within its round (unpersisted below),
-    // and on the FINAL, non-progressing round `resolved` is NOT replaced,
-    // so nothing may release the carried checkpoint that round.
-    val rc = new graft.core.RoundCheckpoints(spark.sparkContext)
-
-    // Round 0: childless nodes average their own raw scores.
-    var resolved = rc.rotate(rc.track(leafScores.groupBy($"id")
-      .agg(floor(avg($"score") * 1000000L).cast("long").as("vmicro"))
-      .join(parentsWithChildren, Seq("id"), "left_anti")
-      .withColumn("height", lit(0))
-      .localCheckpoint()))
-
     val childCounts = edges.groupBy($"parentId").agg(count("*").as("n_children"))
-    var progressing = true
-    var depth = 0
-    while (progressing && depth < maxDepth) {
-      depth += 1
+    // stops after the first round that resolves no new node, observed on
+    // that round's checkpoint (whose rows then equal the previous state)
+    graft.core.Fixpoint("TreeRollup", maxDepth, graft.core.Fixpoint.ReturnState,
+        readsStateOnce = false, inputs = Nil)(
+        // Round 0: childless nodes average their own raw scores.
+        _ => leafScores.groupBy($"id")
+          .agg(floor(avg($"score") * 1000000L).cast("long").as("vmicro"))
+          .join(parentsWithChildren, Seq("id"), "left_anti")
+          .withColumn("height", lit(0))) { (resolved, r) =>
       // Parents all of whose children are resolved, minus already-resolved.
       val candidate = edges
         .join(resolved.withColumnRenamed("id", "childId"),
@@ -71,15 +61,9 @@ object TreeRollup {
         .join(childCounts, Seq("parentId"))
         .filter($"n_resolved" === $"n_children")
         .select($"parentId".as("id"), $"vmicro", $"height")
-      val resolvedNew = candidate
-        .join(resolved.select($"id"), Seq("id"), "left_anti")
-        .cache()
-      progressing = !resolvedNew.isEmpty
-      if (progressing)
-        resolved = rc.rotate(rc.track(
-          resolved.unionByName(resolvedNew).localCheckpoint()))
-      resolvedNew.unpersist()
-    }
-    resolved.select($"id", ($"vmicro" / 1000000L).as("value"), $"height")
+      resolved.unionByName(r.untilNone(
+        candidate.join(resolved.select($"id"), Seq("id"), "left_anti"),
+        lit(true)))
+    }.select($"id", ($"vmicro" / 1000000L).as("value"), $"height")
   }
 }

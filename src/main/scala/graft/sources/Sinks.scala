@@ -402,12 +402,23 @@ class WatermarkStore(path: String) {
     Option(load().getProperty(name)).getOrElse(default)
   }
 
-  /** Commit AFTER the load succeeds — ordering is the correctness property. */
+  /** Commit AFTER the load succeeds — ordering is the correctness property.
+    * The file is written aside and renamed over the old one (the
+    * [[Sinks.publishVersioned]] `_LATEST` idea): a crash mid-write leaves
+    * the previous file, and every watermark in it, intact. */
   def set(name: String, value: String): Unit = {
     val p = load()
     p.setProperty(name, value)
-    Option(file.getParentFile).foreach(_.mkdirs())
-    val out = new java.io.FileOutputStream(file)
-    try p.store(out, "graft watermark store") finally out.close()
+    val dir = file.getAbsoluteFile.getParentFile
+    dir.mkdirs()
+    val tmp = new java.io.File(dir, s".${file.getName}.tmp")
+    val out = new java.io.FileOutputStream(tmp)
+    try {
+      p.store(out, "graft watermark store")
+      out.getFD.sync()
+    } finally out.close()
+    java.nio.file.Files.move(tmp.toPath, file.toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 }

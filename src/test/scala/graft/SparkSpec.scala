@@ -15,6 +15,32 @@ trait SparkSpec extends AnyFunSuite {
   /** Rows of a single-column result as a comparable list. */
   def col0(df: DataFrame): List[Any] =
     df.collect().map(_.get(0)).toList
+
+  /** Driver actions `body` runs, as seen by a QueryExecutionListener (one
+    * event per action). The listener bus delivers asynchronously, so the
+    * count is read once it has stopped changing for 500 ms. */
+  def actionsIn(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        n.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        n.incrementAndGet()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      var last = -1
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (n.get != last && System.nanoTime() < deadline) {
+        last = n.get
+        Thread.sleep(500)
+      }
+      n.get
+    } finally spark.listenerManager.unregister(l)
+  }
 }
 
 object SparkSpec {

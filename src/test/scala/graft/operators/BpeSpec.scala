@@ -91,7 +91,7 @@ class BpeSpec extends SparkSpec {
 
   test("train storage does not grow with merge count") {
     // 8 merge rounds re-checkpoint the pieces table 8 times; the blocks
-    // must rotate (graft.core.RoundCheckpoints) — a realistic 32k-merge
+    // must rotate (graft.core.Fixpoint) — a realistic 32k-merge
     // vocabulary would otherwise hold 32k copies in storage
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet

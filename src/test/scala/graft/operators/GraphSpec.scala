@@ -322,7 +322,7 @@ class GraphSpec extends SparkSpec {
     assert(run(1) == run(13))
   }
 
-  // Storage-rotation bounds (graft.core.RoundCheckpoints): every bounded-
+  // Storage-rotation bounds (graft.core.Fixpoint): every bounded-
   // fixpoint loop must leave O(1) persistent RDDs behind, not O(rounds) —
   // the generalized kCore sf10 lesson. Each op below runs enough rounds
   // that the pre-rotation implementation would trip the bound.

@@ -194,7 +194,7 @@ class NearDupSpec extends SparkSpec {
 
   test("clusters storage does not grow with propagation rounds") {
     // a 64-chain needs several pointer-jump rounds; the per-round label
-    // checkpoints must rotate (graft.core.RoundCheckpoints — Dataset
+    // checkpoints must rotate (graft.core.Fixpoint — Dataset
     // .unpersist can't reach localCheckpoint's RDD-layer blocks), leaving
     // only the final labeling persisted
     val sc = spark.sparkContext

@@ -65,7 +65,7 @@ class TreeRollupSpec extends SparkSpec {
 
   test("rollup storage does not grow with tree depth") {
     // a 12-deep path resolves one level per round; the per-round
-    // `resolved` checkpoints must rotate (graft.core.RoundCheckpoints),
+    // `resolved` checkpoints must rotate (graft.core.Fixpoint),
     // leaving only the final table persisted
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
@@ -78,5 +78,20 @@ class TreeRollupSpec extends SparkSpec {
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.size <= 2,
       s"rollup left ${leaked.size} persistent RDDs (expected <= 2: final resolved)")
+  }
+
+  test("rollup runs one driver action per round") {
+    // height-2 tree: rounds 1-2 resolve a level each, round 3 resolves
+    // nothing; the init checkpoint is the only other action. A separate
+    // emptiness probe per round would add one more action per round.
+    val nodes = Seq(("sem", "na"), ("m1", "sem"), ("m2", "sem"),
+      ("s1", "m1"), ("s2", "m1"), ("s3", "m2")).toDF("id", "parentId")
+    val leaves = Seq(("s1", 80.0), ("s2", 60.0), ("s3", 50.0))
+      .toDF("id", "score")
+    var out: org.apache.spark.sql.DataFrame = null
+    val actions = actionsIn { out = TreeRollup.rollup(nodes, leaves) }
+    assert(out.count() == 6)
+    assert(actions == 1 + 3, s"rollup ran $actions driver actions " +
+      "(expected the init + one per round for 3 rounds)")
   }
 }

@@ -170,4 +170,22 @@ class SinksSpec extends SparkSpec {
     // other pipelines are unaffected
     assert(new WatermarkStore(f).get("teachers") == "1970-01-01T00:00:00")
   }
+
+  test("WatermarkStore survives a writer that crashed mid-write") {
+    val dir = Files.createTempDirectory("wm_crash")
+    val f = dir.resolve("wm.properties").toString
+    val store = new WatermarkStore(f)
+    store.set("students", "2024-05-01T12:00:00")
+    store.set("teachers", "2024-06-01T00:00:00")
+    // a crashed writer's half-written sibling: truncated mid-line
+    val stale = dir.resolve(".wm.properties.tmp")
+    Files.write(stale, "students=2099-".getBytes("UTF-8"))
+    assert(new WatermarkStore(f).get("students") == "2024-05-01T12:00:00")
+    assert(new WatermarkStore(f).get("teachers") == "2024-06-01T00:00:00")
+    store.set("students", "2024-07-01T00:00:00")
+    assert(new WatermarkStore(f).get("students") == "2024-07-01T00:00:00")
+    assert(new WatermarkStore(f).get("teachers") == "2024-06-01T00:00:00")
+    val left = Files.list(dir).toArray.map(_.toString).toSeq
+    assert(left == Seq(f), s"set left files behind: $left")
+  }
 }

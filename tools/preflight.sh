@@ -3,17 +3,18 @@
 # run before ending a round — encodes the round-4 lesson (a regression
 # shipped because no end-to-end pass ran after the last source change).
 #
-#   tools/preflight.sh            # ~6-8 min on a healthy host
+#   tools/preflight.sh
 #
 # Runs, in one sbt JVM: SmokeGateSpec (catalog + streaming tripwires),
-# graft.Verify at sf0.001, then a 1-rep calibrated mini-bench at sf0.01;
-# then the DuckDB oracle compare over the Verify output. Exits non-zero on
-# ANY red: test failure, Verify-recorded query error, oracle mismatch, or
-# bench-recorded query error.
+# graft.Verify at sf0.001 and at sf0.01, then a 1-rep calibrated
+# mini-bench at sf0.01; then the DuckDB oracle compare over each Verify
+# output. Exits non-zero on ANY red: test failure, Verify-recorded query
+# error, oracle mismatch, or bench-recorded query error.
 set -u -o pipefail
 cd "$(dirname "$0")/.."
 
 OUT=/tmp/graft_preflight_out
+OUT_SF001=/tmp/graft_preflight_out_sf001
 LOG=/tmp/graft_preflight.log
 : > "$LOG"
 echo "preflight @ HEAD $(git rev-parse --short HEAD) ($(date -u +%FT%TZ))"
@@ -21,13 +22,14 @@ echo "preflight @ HEAD $(git rev-parse --short HEAD) ($(date -u +%FT%TZ))"
 # One cold sbt JVM for all three stages (a warm `sbt --client` server would
 # not see these env vars). sf dir/reps only affect the Bench stage; Verify
 # takes explicit args.
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 \
 SPARK_GRAFT_BENCH_REPS=1 \
 SPARK_GRAFT_BENCH_ADAPTIVE=0 \
   sbt -batch \
     "testOnly graft.SmokeGateSpec" \
     "runMain graft.Verify /root/testdata/sf0.001 $OUT" \
+    "runMain graft.Verify /root/testdata/sf0.01 $OUT_SF001" \
     "runMain graft.Bench" >> "$LOG" 2>&1
 rc=$?
 if [ $rc -ne 0 ]; then
@@ -36,16 +38,19 @@ if [ $rc -ne 0 ]; then
   exit 1
 fi
 
-if [ "$(cat "$OUT/_errors.json")" != "{}" ]; then
-  echo "FAIL: Verify recorded query errors:"
-  cat "$OUT/_errors.json"
-  exit 1
-fi
-
-if ! python3 tools/check.py /root/testdata/sf0.001 "$OUT" | tail -n 3; then
-  echo "FAIL: oracle mismatch (tools/check.py) -- rerun for the full list"
-  exit 1
-fi
+for pair in "sf0.001 $OUT" "sf0.01 $OUT_SF001"; do
+  set -- $pair
+  if [ "$(cat "$2/_errors.json")" != "{}" ]; then
+    echo "FAIL: Verify recorded query errors at $1:"
+    cat "$2/_errors.json"
+    exit 1
+  fi
+  echo "oracle check at $1:"
+  if ! python3 tools/check.py "/root/testdata/$1" "$2" | tail -n 3; then
+    echo "FAIL: oracle mismatch at $1 (tools/check.py) -- rerun for the full list"
+    exit 1
+  fi
+done
 
 BENCH_LINE=$(grep -o '{"metric".*}' "$LOG" | tail -n 1)
 if [ -z "$BENCH_LINE" ]; then
