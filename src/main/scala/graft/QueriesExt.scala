@@ -108,7 +108,7 @@ object QueriesExt {
       (if (spread) graft.core.Partitioning.spreadToCores(build) else build)
         .localCheckpoint())
 
-  /** Soak/churn instrumentation: the shared-table memo's resident entry
+  /** Soak/perfbench instrumentation: the shared-table memo's resident entry
     * count and measured bytes for one session (the per-session budget's
     * observable — VERDICT r12 asked the exempt rdd-disk class be priced,
     * not just counted). */
@@ -116,10 +116,6 @@ object QueriesExt {
   private[graft] def memoBytes(s: SparkSession): Long = sharedTables.bytes(s)
   private[graft] def memoBreakdownMb(s: SparkSession): Seq[(String, Long)] =
     sharedTables.entriesSized(s).map { case ((_, key), b) => key -> b / 1048576L }
-  // the GLOBAL bound's observables (session-churn / compose legs)
-  private[graft] def memoSessionCount: Int = sharedTables.sessionCount
-  private[graft] def memoTotalBytes: Long = sharedTables.totalBytes
-  private[graft] def memoTotalEntries: Int = sharedTables.totalEntries
 
   /** Memoized table row count per (session, dataset, table). q41 and q167
     * size their adaptive geometry (plane count / band width) from the
@@ -138,9 +134,7 @@ object QueriesExt {
     * analytic — runs ONCE for the whole graph family: q85/q106 read the
     * distinct pair set ([[coPurchaseCanon]]), q122 the strong-tie
     * (n_ord ≥ 2) subgraph. */
-  // package-visible: the MemoChurn leg drives THIS builder through the
-  // real memo path across rotating generation dirs (VERDICT r12 ask #2)
-  private[graft] def coPurchasePairCounts(s: SparkSession, dir: String): DataFrame =
+  private def coPurchasePairCounts(s: SparkSession, dir: String): DataFrame =
     shared(s, dir, "coPurchasePairCounts", spread = false) {
       val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
       li.as("x").join(li.as("y"),

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 /** `file:`-scheme Hadoop filesystem for LOCAL-mode sessions: Hadoop's
   * RawLocalFileSystem minus the per-file permission fork.
   *
-  * Why (r15, root-caused with the OptProbe thread sampler on q71): without
+  * Why (r15, root-caused with a thread-stack sampler on q71): without
   * libhadoop (no NativeIO in this environment), EVERY file Hadoop's local
   * filesystem creates with an explicit permission FORKS a `chmod` process
   * (`RawLocalFileSystem.setPermission` → `Shell.execCommand`, the

@@ -231,9 +231,6 @@ object Schemas {
     student, school, campus, groupStructure, structureRecord, subjectScore,
     studentMonthSubjectScore, transcript)
 
-  def byName(name: String): TableSpec = all.find(_.name == name)
-    .getOrElse(throw new NoSuchElementException(s"no table spec: $name"))
-
   /** K5 migration runner: idempotent mart bootstrap with an applied-ledger,
     * mirroring the reference's `custom_entrypoint.sh:24-56` (each DDL under
     * `migrations/` runs ONCE, its name recorded in applied_migrations.txt;

@@ -303,12 +303,4 @@ private[graft] final class SessionMemo[K, V](
       t
     }
   }
-
-  /** Driver-wide entry count across every registered session (the
-    * churn legs' drain bound: post-GC persistent RDDs ≈ this). */
-  private[graft] def totalEntries: Int = maps.synchronized {
-    var n = 0
-    maps.values.forEach(sb => n += sb.entries.size)
-    n
-  }
 }

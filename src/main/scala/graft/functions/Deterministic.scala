@@ -28,11 +28,6 @@ object Deterministic {
     * Oracle-SQL mirror: `CAST(sum(CAST(x AS DECIMAL(18,2))) AS DOUBLE)`. */
   def decSum(c: Column): Column = sum(dec(c)).cast(DoubleType)
 
-  /** Exact-sum average: decimal sum divided by count as double division of
-    * identical operands — deterministic on both engines.
-    * Mirror: `CAST(sum(CAST(x AS DECIMAL(18,2))) AS DOUBLE) / count(x)`. */
-  def decAvg(c: Column): Column = decSum(c) / count(c)
-
   /** TPC-H style discounted revenue: Σ price·(1−discount), computed fully in
     * decimal (exact product, exact sum), then one double conversion.
     * Mirror: `CAST(sum(CAST(p AS DECIMAL(18,2)) * (1 - CAST(d AS DECIMAL(18,2)))) AS DOUBLE)`. */

@@ -359,9 +359,6 @@ object Text {
     }
   }
 
-  def langScores(text: Column): Seq[(String, Column)] =
-    langScoresFromTokens(tokens(text))
-
   def langIdFromTokens(w: Column): Column = {
     val scores = langScoresFromTokens(w)
     // first language whose score is >= all others (priority on ties)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Text
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exact n-gram Jaccard near-duplicate joins over hashed-shingle sets
@@ -59,40 +59,6 @@ object NearDup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     verifyRs(corpus, probe, cand, tau, broadcastB = true)
-  }
-
-  /** Prefix filter with GLOBAL df-ascending ordering (the classic PPJoin
-    * token order): one counting pass computes each shingle's document
-    * frequency, every document's hash set is re-sorted by (df, hash), and
-    * the τ-prefix is taken in THAT order — so the most viral shingles sit
-    * at the very END of every document's ordering and fall out of every
-    * prefix. [[prefixJoinPairs]]'s hash ordering bounds the viral-shingle
-    * join volume only in expectation (a boilerplate shingle lands in
-    * ~(1−τ) of prefixes); df ordering removes it from ALL prefixes unless
-    * a document consists almost entirely of viral shingles — the
-    * worst-case guarantee for 100 TB corpora with heavy boilerplate.
-    * Completeness is unaffected: the prefix theorem needs only a
-    * consistent total order over the universe, which (df, hash) is.
-    * Costs one extra aggregation + join over exploded postings — both
-    * map-side-combinable and linear in corpus size. */
-  def prefixJoinPairsDfOrdered(docs: DataFrame, tau: Double): DataFrame = {
-    val posting = docs.select(col("doc_id"), explode(col("hs")).as("g"))
-    val df = posting.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val ordered = posting.join(df, Seq("g"))
-      .groupBy(col("doc_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("df"), col("g")))),
-        s => s.getField("g")).as("hs"))
-    val pref = ordered.select(col("doc_id"),
-      explode(prefixInGivenOrder(col("hs"), tau)).as("g"))
-    verify(docs, candidatesFromPostings(pref), tau)
-  }
-
-  /** First (n − ⌊τ·n⌋ + 1) elements of an ALREADY-ORDERED hash array —
-    * [[Text.prefixHashes]] without the re-sort. */
-  private def prefixInGivenOrder(hs: Column, tau: Double): Column = {
-    val n = size(hs)
-    slice(hs, lit(1), greatest(lit(1), (n - floor(n * lit(tau)) + 1).cast("int")))
   }
 
   private def candidatesFromPostings(pref: DataFrame): DataFrame =

@@ -31,8 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object MonthlySubjectScores {
 
-  private val GradeFields = Seq("grade", "gpa", "meaning")
-
   /** @param evaluations evaluationId, parentId, type, name, maxScore, coe,
     *                    schoolId, campusId, groupStructureId, structurePath,
     *                    templateId, configGroupId, referenceId, createdAt

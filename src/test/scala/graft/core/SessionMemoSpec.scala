@@ -186,6 +186,26 @@ class SessionMemoSpec extends SparkSpec {
     assert(memo.sessionCount == 2, "re-registration must re-evict")
   }
 
+  test("the engine's shared-table memo prices a real checkpoint at its stored size") {
+    // QueriesExt.shared on a fresh session: one checkpointed entry whose
+    // priced bytes are the block manager's mem+disk figure for its RDD
+    val s = spark.newSession()
+    val builds = new AtomicInteger(0)
+    def table = graft.QueriesExt.shared(s, "memo-pricer-spec", "t") {
+      builds.incrementAndGet(); s.range(5000).toDF("v")
+    }
+    val before = graft.QueriesExt.memoEntries(s)
+    val df = table
+    assert(graft.QueriesExt.memoEntries(s) == before + 1)
+    val id = RoundCheckpoints.persistedRddId(df)
+    assert(id.isDefined, "memoized table has no persisted RDD")
+    val stored = spark.sparkContext.getRDDStorageInfo.filter(_.id == id.get)
+      .map(i => i.memSize + i.diskSize).sum
+    val priced = graft.QueriesExt.memoBytes(s)
+    assert(priced > 0 && priced == stored, s"priced $priced B, stored $stored B")
+    assert((table eq df) && builds.get() == 1, "a memo hit ran the build")
+  }
+
   test("context end drops every session's sub-memo (the lifetime signal)") {
     // weak keys cannot collect an entry whose DataFrame value reaches
     // the session; SparkSession.stop stops the context, and the

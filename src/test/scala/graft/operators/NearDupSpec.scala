@@ -27,37 +27,6 @@ class NearDupSpec extends SparkSpec {
     assert(pref > 0)
   }
 
-  test("df-ordered prefix join agrees with count join and kills the worst case") {
-    val a = NearDup.prefixJoinPairsDfOrdered(docs, 0.8)
-      .select($"doc_a", $"doc_b", round($"jac", 9)).collect().toSet
-    val b = NearDup.countJoinPairs(docs, 0.8)
-      .select($"doc_a", $"doc_b", round($"jac", 9)).collect().toSet
-    assert(a.nonEmpty && a == b)
-    // worst case for HASH-ordered prefixes: the viral shingle has the
-    // SMALLEST hash, so it sits in every hash-ordered prefix — df ordering
-    // pushes it to the end of every document and out of all prefixes
-    val viral = (0 until 200).map { i =>
-      (i.toLong, (7L +: (0 until 10).map(j => 1000L + i * 10 + j).map(_.toLong)).toSeq)
-    }.toDF("doc_id", "hs")
-    // no true near-dups either way — both pipelines verify to empty
-    assert(NearDup.prefixJoinPairs(viral, 0.8).isEmpty)
-    assert(NearDup.prefixJoinPairsDfOrdered(viral, 0.8).isEmpty)
-    val hashCand = viral.select($"doc_id", explode(
-      graft.functions.Text.prefixHashes($"hs", 0.8)).as("g"))
-      .filter($"g" === 7L).count()
-    assert(hashCand == 200, "hash order: viral shingle in every prefix (worst case)")
-    // df-ordered postings never index the viral shingle
-    val posting = viral.select($"doc_id", explode($"hs").as("g"))
-    val dfc = posting.groupBy($"g").count()
-    val ordered = posting.join(dfc, Seq("g")).groupBy($"doc_id")
-      .agg(org.apache.spark.sql.functions.transform(
-        array_sort(collect_list(struct($"count", $"g"))),
-        s => s.getField("g")).as("hs"))
-    val dfCand = ordered.select($"doc_id", explode(slice($"hs", 1,
-      11 - 8 + 1)).as("g")).filter($"g" === 7L).count()
-    assert(dfCand == 0, "df order: viral shingle out of every prefix")
-  }
-
   test("cross-corpus prefix join equals the brute-force R-S pairs (completeness)") {
     // corpus (id%3!=0) and probe (id%3==0) are DISJOINT id sets; matches
     // exist because the fixture's duplicate/near-dup texts straddle the

@@ -26,7 +26,7 @@ case class Sub(subjectId: String, name: String, nameNative: Option[String],
 class PipelinesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ev(id: String, parent: String, typ: String, name: String = "",
+  private def ev(id: String, parent: String, typ: String, name: String,
       maxScore: Option[Double] = None, coe: Option[Double] = None) =
     Ev(id, parent, typ, name, maxScore, coe, "sch", Some("cam"), None, None,
       Some("tpl"), Some("cfg"), Some(s"ref-$id"), "2024-01-01T00:00:00Z")
