@@ -28,30 +28,6 @@ private[graft] final class IoListener
   def reset(): Unit = {
     shuffleW.set(0); spillDisk.set(0); spillMem.set(0); input.set(0)
   }
-  // Per-stage attribution (SPARK_GRAFT_IO_STAGES=1): WHICH stage spills
-  // decides the fix — partition count for per-task sort overflow, plan
-  // change for an inherent working set (the round-10 q85 forensics).
-  // Stderr-only; never part of the JSON contract. Read once; like every
-  // other SPARK_GRAFT_* flag the VALUE matters — empty or "0" disables
-  // (ADVICE r10: bare `contains` enabled it for =0 too).
-  private val stageAttribution = sys.env.get("SPARK_GRAFT_IO_STAGES")
-    .exists(v => v.nonEmpty && v != "0")
-  override def onStageCompleted(
-      e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-    if (stageAttribution) {
-      val si = e.stageInfo
-      val m = si.taskMetrics
-      if (m != null) {
-        def mb(v: Long) = (v / 1048576.0).round
-        System.err.println(
-          s"[io-stage] id=${si.stageId} tasks=${si.numTasks} " +
-            s"shuffle_mb=${mb(m.shuffleWriteMetrics.bytesWritten)} " +
-            s"spill_disk_mb=${mb(m.diskBytesSpilled)} " +
-            s"spill_mem_mb=${mb(m.memoryBytesSpilled)} " +
-            s"input_mb=${mb(m.inputMetrics.bytesRead)} " +
-            s"name=${si.name.takeWhile(_ != '\n').take(80)}")
-      }
-    }
   /** (shuffle_write, spill_disk, spill_mem, input) in bytes since reset.
     * Listener-bus delivery is asynchronous; callers snapshot AFTER the
     * query's jobs complete and poll until two reads agree so late task

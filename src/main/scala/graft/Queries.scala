@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Tables
+import graft.core.Tables.{apply => t}
 import graft.functions.Deterministic._
 import graft.functions.Scalar
 import graft.operators.Relational
@@ -22,9 +23,6 @@ object Queries {
   type Q = (SparkSession, String) => DataFrame
 
   final case class Entry(name: String, fn: Q, oracle: Option[String])
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   // ---------------------------------------------------------------- scans
 
@@ -492,7 +490,7 @@ object Queries {
           col("l_returnflag")),
       out, partitionCols = Seq("l_returnflag"), sortCols = Seq("l_orderkey"),
       mode = org.apache.spark.sql.SaveMode.Overwrite)
-    s.read.parquet(out)
+    Tables.read(s, out)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sum_qty"))
       .orderBy(col("l_returnflag"))

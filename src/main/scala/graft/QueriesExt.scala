@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Tables
+import graft.core.Tables.{apply => t}
 import graft.functions.{Text, Vectors}
 import graft.operators.{Packing, Ranking, TreeRollup}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -14,9 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object QueriesExt {
   import Queries.{Entry, Q}
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   /** [[t]] spread to the session's parallelism when the file layout
     * under-splits it (single-row-group corpora scan as ONE task — guide

@@ -69,7 +69,7 @@ object ScaleUp {
       factor: Int): Unit = {
     new java.io.File(dstDir).mkdirs()
     def src(name: String): DataFrame =
-      spark.read.parquet(s"$srcDir/$name.parquet")
+      graft.core.Tables.read(spark, s"$srcDir/$name.parquet")
 
     // fixed dimensions: the nation/region domain does not grow with volume
     writeOne(src("region"), s"$dstDir/region.parquet")

@@ -81,7 +81,7 @@ object SubCorpus {
       deleteRecursively(t)
       copyEntry(f, t)
     }
-    val docs = spark.read.parquet(s"$srcDir/$table.parquet")
+    val docs = graft.core.Tables.read(spark, s"$srcDir/$table.parquet")
     // distinct BEFORE the md5 top-k: a non-unique key (l_orderkey has
     // ~4 lines per order) must select whole key groups, never split one
     val keep = docs

@@ -267,7 +267,7 @@ object Schemas {
       // (overwrite) or strand debris forever (ignore).
       val dir = new org.apache.hadoop.fs.Path(basePath, spec.name)
       val adoptable = fs.exists(dir) &&
-        scala.util.Try(spark.read.parquet(dir.toString).schema).isSuccess
+        scala.util.Try(Tables.read(spark, dir.toString)).isSuccess
       if (!adoptable) {
         // empty DF with the declared schema; repartition(1) forces one
         // task so a real parquet footer (the schema) lands on disk

@@ -23,7 +23,6 @@ object Sessions {
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // AQE coalesce floor stays at the 1 MB DEFAULT (stated explicitly
       // because the alternative was probed and REJECTED, r14): a 64 KB
       // floor was tried for q31's CPU-dense verify stages (2 MB shingle
@@ -129,7 +128,6 @@ object Sessions {
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.plans.GraftFunctions.register(spark)
     // runtime-injectable optimizer rules (extensions bind at build time
     // only); idempotent AND append-safe: rules the host application

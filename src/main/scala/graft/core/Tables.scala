@@ -1,9 +1,15 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Test-table catalog over the driver-generated parquet dirs (TESTDATA.md).
+/** Test-table catalog over the driver-generated parquet dirs (TESTDATA.md),
+  * and the engine's one parquet read path ([[read]]).
   *
   * Mirrors the reference's fixed, declared-up-front schema catalog (SURVEY
   * §1.1: every ClickHouse table is DDL-declared; nothing is inferred at query
@@ -25,11 +31,63 @@ object Tables {
     * µs-precision values), a timestamp `ts` passes through untouched.
     */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
-    case "events" =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$sfDir/events.parquet")
-      rescueNanosTs(df)
-    case _ => spark.read.parquet(s"$sfDir/$name.parquet")
+    case "events" => rescueNanosTs(read(spark, s"$sfDir/events.parquet"))
+    case _ => read(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** Read the parquet table at `path` (a file, a directory, partitioned or
+    * not, or a glob) with the schema its footer declares. Every parquet
+    * read in the engine goes through here: a bare `spark.read.parquet(path)`
+    * infers the same schema with a Spark job per call, while this reads one
+    * footer on the driver and starts none. Nothing is cached, so rotated or
+    * appended data is re-read by construction; partition columns are still
+    * discovered from the directory names by the scan.
+    *
+    * The footer is that of the first data file in path order (the file
+    * Spark's own inference picks), skipping `_`/`.`-prefixed names as
+    * Spark's listing does. Spark-written files carry their Spark schema in
+    * the footer's key-value metadata, which wins; other writers' files
+    * go through Spark's parquet-to-Spark type converter. Both the converter
+    * and the scan need `nanosAsLong` for the INT64 TIMESTAMP(NANOS)
+    * generation of `events`, so it is set here, the one place it is set.
+    *
+    * @throws IllegalArgumentException naming `path` when it holds no data
+    *   file or the footer cannot be read
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def visible(s: FileStatus) = {
+      val n = s.getPath.getName
+      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+    }
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.filter(visible).flatMap(leaves)
+      else Seq(s)
+    val first = Option(fs.globStatus(root)).toSeq.flatten.flatMap(leaves)
+      .minByOption(_.getPath.toString)
+      .getOrElse(throw new IllegalArgumentException(s"$path: no parquet data file"))
+    val meta =
+      try {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+        try reader.getFooter.getFileMetaData finally reader.close()
+      } catch {
+        case e: Exception => throw new IllegalArgumentException(
+          s"$path: unreadable parquet footer in ${first.getPath}", e)
+      }
+    Option(meta.getKeyValueMetaData.get(SparkSchemaKey))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(meta.getSchema))
   }
 
   /** Normalize `ts` to a session-tz TIMESTAMP whatever the footer declares:

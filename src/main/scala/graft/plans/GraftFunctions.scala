@@ -186,11 +186,16 @@ object GraftFunctions {
       arity("graft_pii_count", 1)(c => piiCountExpr(c.head)))
   )
 
-  def register(spark: SparkSession): Unit =
+  /** Register each function the session's registry does not already hold
+    * (by name), so repeated [[graft.core.Sessions.tune]] calls are free. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, usage, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name), info(name, usage), builder)
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, info(name, usage), builder)
     }
+  }
 
   def inject(ext: SparkSessionExtensions): Unit =
     functions.foreach { case (name, usage, builder) =>

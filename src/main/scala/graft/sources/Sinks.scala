@@ -239,7 +239,7 @@ object Sinks {
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
 
-    val df = spark.read.parquet(path)
+    val df = graft.core.Tables.read(spark, path)
     val arranged =
       if (partitionCols.nonEmpty) {
         // split each key into ~nOut/nKeys salted groups so big keys still
@@ -350,7 +350,7 @@ object Sinks {
       require(vs.nonEmpty, s"readPublished: no published version under $root")
       f"v=${vs.last}%06d"
     }
-    spark.read.parquet(new org.apache.hadoop.fs.Path(rootPath, dir).toString)
+    graft.core.Tables.read(spark, new org.apache.hadoop.fs.Path(rootPath, dir).toString)
   }
 
   /** Sorted version numbers of ALL `v=NNNNNN` dirs under root, complete or

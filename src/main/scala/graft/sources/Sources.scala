@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.core.Schemas.TableSpec
+import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -21,10 +22,10 @@ object Sources {
 
   /** Schema-checked parquet read: declared schema is asserted against the
     * footer (names + types of the projected columns) so drift fails loudly
-    * at plan time. */
+    * at plan time, before any job runs. */
   def parquet(spark: SparkSession, path: String, schema: StructType,
       projection: Seq[String] = Nil, predicate: Option[String] = None): DataFrame = {
-    val raw = spark.read.parquet(path)
+    val raw = Tables.read(spark, path)
     val declared = schema.fields.map(f => f.name -> f.dataType).toMap
     val wanted = if (projection.nonEmpty) projection else schema.fieldNames.toSeq
     wanted.foreach { n =>
@@ -63,7 +64,7 @@ object Sources {
   /** Read a mart table written by [[Sinks.writePartitioned]] and conform it
     * to its catalog spec — the read side of the schema contract. */
   def mart(spark: SparkSession, basePath: String, spec: TableSpec): DataFrame =
-    spec.conform(spark.read.parquet(s"$basePath/${spec.name}"))
+    spec.conform(Tables.read(spark, s"$basePath/${spec.name}"))
 
   /** S5 federated-source registration: expose a remote JDBC table on the
     * `spark.sql` surface, like the reference's `ENGINE = PostgreSQL`

@@ -315,16 +315,16 @@ object Streaming {
     * overflow rather than trusting the headroom. */
   private val ProgressRetention = 10000
 
-  /** The shared events source: declared schema, schema-dispatched
+  /** The shared events source: the footer's schema
+    * ([[graft.core.Tables.read]]), schema-dispatched
     * int64-nanos → timestamp rescue ([[graft.core.Tables.rescueNanosTs]] —
     * applied only when the footer declares `ts` as a long), and a glob that
     * admits `events*.parquet` so files arriving between runs are picked up
     * on resume. */
   private def eventsStream(spark: SparkSession, srcDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
       ProgressRetention.toString)
-    val schema = spark.read.parquet(s"$srcDir/events.parquet").schema
+    val schema = graft.core.Tables.read(spark, s"$srcDir/events.parquet").schema
     graft.core.Tables.rescueNanosTs(
       spark.readStream
         .schema(schema)
@@ -761,7 +761,7 @@ object Streaming {
     require(lengthBucket >= 1, s"lengthBucket must be >= 1, got $lengthBucket")
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
       ProgressRetention.toString)
-    val schema = spark.read.parquet(s"$srcDir/documents.parquet").schema
+    val schema = graft.core.Tables.read(spark, s"$srcDir/documents.parquet").schema
     val docs = spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "documents*.parquet")

@@ -7,9 +7,11 @@
 #
 # Runs, in one sbt JVM: SmokeGateSpec (catalog + streaming tripwires),
 # graft.Verify at sf0.001 and at sf0.01, then a 1-rep calibrated
-# mini-bench at sf0.01; then the DuckDB oracle compare over each Verify
-# output. Exits non-zero on ANY red: test failure, Verify-recorded query
-# error, oracle mismatch, or bench-recorded query error.
+# mini-bench at sf0.01; then the benchmark harness's own tests (`sbt test`
+# in perfbench/, which the engine's test run does not cover); then the
+# DuckDB oracle compare over each Verify output. Exits non-zero on ANY
+# red: test failure, Verify-recorded query error, oracle mismatch, or
+# bench-recorded query error.
 set -u -o pipefail
 cd "$(dirname "$0")/.."
 
@@ -34,6 +36,18 @@ SPARK_GRAFT_BENCH_ADAPTIVE=0 \
 rc=$?
 if [ $rc -ne 0 ]; then
   echo "FAIL: sbt stage rc=$rc (SmokeGateSpec / Verify / Bench) -- see $LOG"
+  tail -n 30 "$LOG"
+  exit 1
+fi
+
+# perfbench is its own sbt build (it compiles against the engine sources);
+# run after the engine JVM exits so the two never share the target lock
+echo "perfbench tests:"
+(cd perfbench && sbt -batch test) >> "$LOG" 2>&1
+rc=$?
+grep -a 'Tests: succeeded' "$LOG" | tail -n 1
+if [ $rc -ne 0 ]; then
+  echo "FAIL: perfbench sbt test rc=$rc -- see $LOG"
   tail -n 30 "$LOG"
   exit 1
 fi
