@@ -26,8 +26,7 @@ object Explain {
     val unknown = names.filterNot(all.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     planDir.foreach(Files.createDirectories(_))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.core.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = graft.core.Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     try names.foreach { name =>
       val fn = all(name)

@@ -58,9 +58,7 @@ object ScaleUp {
     val Array(srcDir, dstDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 2, s"factor must be >= 2, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = graft.core.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.fromEnv()
     try run(spark, srcDir, dstDir, factor)
     finally spark.stop()
   }

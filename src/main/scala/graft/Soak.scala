@@ -59,11 +59,6 @@ object Soak {
       case Array(a, b, f) => (a, b, f.split(",").map(_.trim).toSet)
       case _ => sys.error("usage: Soak <sfDir> <outJson> [onlyCsv]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // SPARK_GRAFT_MASTER (the Bench/Verify contract): the multi-executor
-    // soak leg runs THIS entrypoint through spark-submit on
-    // local-cluster[W,C,M] — the env must match --master
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     // App-private local dir (ADVICE r12): the disk gate previously
     // summed every blockmgr-*/spark-* under java.io.tmpdir, so a
     // concurrent Spark job on the host could false-fail the bound (or
@@ -75,10 +70,8 @@ object Soak {
     // SPARK_LOCAL_DIRS, which these legs never do).
     val localDir = Files.createTempDirectory("graft-soak-").toFile
     localDir.deleteOnExit()
-    val spark = graft.core.Sessions.builder(master, cpus)
-      .config("spark.local.dir", localDir.getAbsolutePath)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.fromEnv(
+      "spark.local.dir" -> localDir.getAbsolutePath)
     val sc = spark.sparkContext
 
     def rddCount: Int = sc.getPersistentRDDs.size

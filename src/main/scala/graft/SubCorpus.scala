@@ -57,9 +57,7 @@ object SubCorpus {
         "usage: SubCorpus <srcDir> <dstDir> <nKeys> [<table> <keyColumn>]")
     }
     require(n >= 1, s"nKeys must be >= 1, got $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = graft.core.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.fromEnv()
     try run(spark, srcDir, dstDir, n, table, key)
     finally spark.stop()
   }

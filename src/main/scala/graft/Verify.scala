@@ -16,16 +16,11 @@ object Verify {
       case Array(a, b, f) => (a, b, f.split(",").map(_.trim).toSet)
     }
     def selected(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // SPARK_GRAFT_MASTER (same contract as Bench): the multi-executor
-    // correctness leg (tools/lcverify.sh) runs THIS entrypoint through
-    // spark-submit on local-cluster[W,C,M] — real executor processes —
-    // to pin that every query's RESULT is topology-invariant, not just
-    // its plan bytes. The env must match spark-submit's --master; an
-    // explicit .master() always wins over the CLI flag.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = graft.core.Sessions.builder(master, cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER: the multi-executor correctness leg
+    // (tools/lcverify.sh) runs THIS entrypoint through spark-submit on
+    // local-cluster[W,C,M] — real executor processes — to pin that every
+    // query's RESULT is topology-invariant.
+    val spark = graft.core.Sessions.fromEnv()
     new java.io.File(outDir).mkdirs()
     // record the topology that produced this artifact (ADVICE r11: a
     // forgotten `export SPARK_GRAFT_MASTER=local-cluster[...]` would
@@ -35,7 +30,7 @@ object Verify {
       s"${spark.sparkContext.master}\n")
     if (sys.env.contains("SPARK_GRAFT_MASTER"))
       System.err.println(
-        s"[verify] NOTE: SPARK_GRAFT_MASTER override active -> $master")
+        s"[verify] NOTE: SPARK_GRAFT_MASTER override active -> ${spark.sparkContext.master}")
     // Failures must land in the artifact, not only stderr: a query that
     // errors here writes no parquet dir, and "missing" is indistinguishable
     // from "never declared" downstream (the round-4 lesson — 40 broken

@@ -34,12 +34,9 @@ object Sessions {
       // kernel, local spreads), never with a session-wide byte floor.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
 
-  /** Local shuffle parallelism: cores, unconditionally. The sf10
-    * partition-count experiments override this through the BENCH
-    * entrypoint only (`SPARK_GRAFT_SHUFFLE_PARTITIONS`, read in
-    * [[graft.Bench]]) — reading an override env var here would let a
-    * leftover shell export from a bench experiment silently change
-    * Verify, tests, and SubCorpus runs too (ADVICE r9). */
+  /** Local shuffle parallelism: cores, unconditionally (no override env
+    * var here: a leftover shell export would silently change Verify,
+    * tests and SubCorpus runs too). */
   def builder(master: String, cores: Int): SparkSession.Builder =
     semantics(SparkSession.builder()
       .master(master)
@@ -114,6 +111,22 @@ object Sessions {
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.memory.offHeap.enabled", "true")
       .config("spark.memory.offHeap.size", (16L << 30).toString)
+
+  /** The session every `graft.*` main starts: [[builder]] with
+    * `SPARK_GRAFT_CPUS` cores (default: this host's) on
+    * `SPARK_GRAFT_MASTER` (default `local[cores]`), plus the caller's
+    * `confs`, at log level WARN. The master comes from the env, never from
+    * a literal, because the spark-submit legs on `local-cluster[W,C,M]`
+    * (tools/lcbench.sh, tools/lcverify.sh) set `--master`, and an explicit
+    * `.master()` would override it; the env must match the flag. */
+  def fromEnv(confs: (String, String)*): SparkSession = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")
+    val s = builder(master, cores).config(confs.toMap).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()

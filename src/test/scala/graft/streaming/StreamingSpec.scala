@@ -204,6 +204,24 @@ class StreamingSpec extends SparkSpec {
     assert(a == b && a > 0)
   }
 
+  test("the memory-sink runner propagates a stream failure and drops its view") {
+    val sf = "/root/testdata/sf0.001"
+    def streamViews = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("graft_stream_")).toSet
+    val before = streamViews
+    val failing = Streaming.parquetStream(spark, sf, "events")
+      .filter(org.apache.spark.sql.functions.expr(
+        "raise_error('graft runner boom') IS NULL"))
+      .select("user_id")
+    val e = intercept[Exception](
+      Streaming.runToMemory(failing, "append", "user_id"))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.exists(c => Option(c.getMessage)
+      .exists(_.contains("graft runner boom"))), s"got $e")
+    assert(streamViews == before, "the failed run left its temp view registered")
+  }
+
   test("sessionizeCustomState agrees with session_window on real events") {
     // derive both sessionizations of the sf0.001 events table and compare
     val sf = "/root/testdata/sf0.001"

@@ -16,7 +16,6 @@ cd /root/repo
 gclog="$out.gc.log"
 rm -f "$gclog"
 SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 SPARK_GRAFT_BENCH_REPS="$reps" \
 SPARK_GRAFT_BENCH_ONLY="$q" \
 SPARK_GRAFT_SF_DIR="$sf" \

@@ -27,7 +27,6 @@ echo "preflight @ HEAD $(git rev-parse --short HEAD) ($(date -u +%FT%TZ))"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 \
 SPARK_GRAFT_BENCH_REPS=1 \
-SPARK_GRAFT_BENCH_ADAPTIVE=0 \
   sbt -batch \
     "testOnly graft.SmokeGateSpec" \
     "runMain graft.Verify /root/testdata/sf0.001 $OUT" \
@@ -74,20 +73,12 @@ fi
 python3 - "$BENCH_LINE" <<'EOF'
 import json, sys
 d = json.loads(sys.argv[1])
-if "qt" in d:
-    # round-12 compact twin: dense "qNN:sec;..." string + n_errors count
-    if d.get("n_errors", 0):
-        print(f"FAIL: mini-bench recorded {d['n_errors']} query errors "
-              f"(see the full line in the log)")
-        sys.exit(1)
-    n = len([e for e in d["qt"].split(";") if e])
-else:
-    errs = d.get("errors", {})
-    if errs:
-        print(f"FAIL: mini-bench recorded {len(errs)} query errors: "
-              f"{', '.join(sorted(errs))}")
-        sys.exit(1)
-    n = len(d["queries"])
+errs = d["errors"]
+if errs:
+    print(f"FAIL: mini-bench recorded {len(errs)} query errors: "
+          f"{', '.join(sorted(errs))}")
+    sys.exit(1)
+n = len(d["queries"])
 print(f"mini-bench ok: {n} queries, total "
       f"{float(d['value']):.1f}s raw, calib_sec {d.get('calib_sec', 0):.3f}")
 EOF
