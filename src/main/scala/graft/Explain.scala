@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: time named queries in one warm session and show each one's
@@ -12,9 +13,12 @@ import org.apache.spark.sql.execution.FormattedMode
   * `runMain graft.Explain <q1,q2,...> [sfDir] [reps] [planDir]`
   *
   * Each rep is one construction plus a `noop` write, the region Bench
-  * times, followed by `clearCache` as in Bench. With `planDir` each plan
-  * goes to `<planDir>/<qNN>.txt`, otherwise to stdout. Per-job timings
-  * come from the perfbench trace (`perfbench/run.py --trace 1`).
+  * times, followed by `clearCache` as in Bench; its line carries
+  * `compiles=<n>`, the classes Janino compiled during the rep (0 on a
+  * replay whose generated code is all in Spark's codegen cache). With
+  * `planDir` each plan goes to `<planDir>/<qNN>.txt`, otherwise to
+  * stdout. Per-job timings come from the perfbench trace
+  * (`perfbench/run.py --trace 1`).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -37,11 +41,13 @@ object Explain {
         case None => println(plan)
       }
       val times = (1 to reps).map { i =>
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         spark.catalog.clearCache()
-        println(f"[explain] $name rep $i: $dt%.3f s")
+        println(f"[explain] $name rep $i: $dt%.3f s compiles=$compiles")
         dt
       }.sorted
       if (times.nonEmpty)

@@ -1,6 +1,7 @@
 package graft.core
 
 import java.lang.ref.WeakReference
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation}
@@ -40,7 +41,8 @@ import scala.collection.mutable.{ArrayBuffer, Buffer}
   *  - release on EVERY exit of the caller-owned `inputs` (the edge tables
   *    and loop-invariant caches an operator built for this loop), of the
   *    intra-round [[Round.cache]]s, and — on failure or an exhausted
-  *    [[Fail]] bound — of every tracked round block, so a failed query
+  *    [[Fail]] bound — of every tracked round block and of the RDD a
+  *    failed checkpoint job had already persisted, so a failed query
   *    strands nothing on a long-lived session. The returned state is the
   *    last round's checkpoint: truncated lineage, so releasing the inputs
   *    never removes its recovery source.
@@ -102,7 +104,7 @@ private[graft] object Fixpoint {
     val scratch = ArrayBuffer.empty[DataFrame]
     val rc = new Rounds
     def checkpoint(df: DataFrame): DataFrame = {
-      val out = rc.track(df.localCheckpoint())
+      val out = rc.track(localCheckpoint(df, s"Fixpoint $name"))
       scratch.foreach(_.unpersist()); scratch.clear()
       out
     }
@@ -134,6 +136,39 @@ private[graft] object Fixpoint {
       scratch.foreach(_.unpersist())
       inputs.foreach(release)
     }
+  }
+
+  /** Makes each round's call-site label unique in the JVM. */
+  private val checkpoints = new AtomicLong
+
+  /** The local property behind `SparkContext.setCallSite`. */
+  private val CallSiteShort = "callSite.short"
+
+  /** `df.localCheckpoint()` that releases, when its job fails, the RDD it
+    * persisted: Spark persists the checkpoint's internal RDD before the
+    * job runs and hands back no reference when the job throws, so that
+    * RDD would stay in `getPersistentRDDs` until GC. The call runs under
+    * a JVM-unique call-site label, a thread-local property that every RDD
+    * created on this thread (or on threads Spark starts for this query)
+    * records; on failure exactly the unnamed persisted RDDs carrying the
+    * label are released. A concurrent statement's RDDs never carry it,
+    * and a `cache()`d relation the job happened to build is named by the
+    * CacheManager, so ownership stays exact. One action, and the round's
+    * `untilNone` `Observation` still reads off the checkpoint job. */
+  private def localCheckpoint(df: DataFrame, label: String): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val site = s"$label #${checkpoints.incrementAndGet()}"
+    val outer = sc.getLocalProperty(CallSiteShort)
+    sc.setCallSite(site)
+    try df.localCheckpoint()
+    catch {
+      case t: Throwable =>
+        // an unnamed RDD prints as `<class>[<id>] at <creation site>`
+        sc.getPersistentRDDs.values
+          .filter(r => r.toString == s"${r.getClass.getSimpleName}[${r.id}] at $site")
+          .foreach(_.unpersist(blocking = false))
+        throw t
+    } finally sc.setLocalProperty(CallSiteShort, outer)
   }
 
   /** A cache()d input leaves the CacheManager; a localCheckpoint()ed one

@@ -135,6 +135,23 @@ class FixpointSpec extends SparkSpec {
       "a failed round stranded blocks (ADVICE r11: the finally path)")
   }
 
+  test("a round whose checkpoint job fails leaves no persisted RDD behind") {
+    // Spark persists the checkpoint's internal RDD before the job runs;
+    // the failed job hands the driver no reference to it
+    val before = persistedIds
+    val input = spark.range(10).toDF("v").localCheckpoint()
+    intercept[Exception] {
+      Fixpoint("raise", 3, Fixpoint.ReturnState, readsStateOnce = false,
+          inputs = Seq(input))(_ => input.selectExpr("v")) { (state, r) =>
+        r.untilNone(
+          state.selectExpr("v + CAST(raise_error('round 1 fails') AS BIGINT) AS v"),
+          org.apache.spark.sql.functions.lit(true))
+      }
+    }
+    assert((persistedIds -- before).isEmpty,
+      "the failed round's checkpoint RDD stayed persisted")
+  }
+
   test("track rejects a dataset with no persisted lineage") {
     val rc = new Fixpoint.Rounds
     intercept[IllegalArgumentException] {

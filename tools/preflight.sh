@@ -5,7 +5,8 @@
 #
 #   tools/preflight.sh
 #
-# Runs, in one sbt JVM: SmokeGateSpec (catalog + streaming tripwires),
+# Runs, in one sbt JVM: SmokeGateSpec (catalog + streaming tripwires) and
+# SessionsSpec (the codegen cache size),
 # graft.Verify at sf0.001 and at sf0.01, then a 1-rep calibrated
 # mini-bench at sf0.01; then the benchmark harness's own tests (`sbt test`
 # in perfbench/, which the engine's test run does not cover); then the
@@ -28,13 +29,13 @@ SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 \
 SPARK_GRAFT_BENCH_REPS=1 \
   sbt -batch \
-    "testOnly graft.SmokeGateSpec" \
+    "testOnly graft.SmokeGateSpec graft.core.SessionsSpec" \
     "runMain graft.Verify /root/testdata/sf0.001 $OUT" \
     "runMain graft.Verify /root/testdata/sf0.01 $OUT_SF001" \
     "runMain graft.Bench" >> "$LOG" 2>&1
 rc=$?
 if [ $rc -ne 0 ]; then
-  echo "FAIL: sbt stage rc=$rc (SmokeGateSpec / Verify / Bench) -- see $LOG"
+  echo "FAIL: sbt stage rc=$rc (SmokeGateSpec / SessionsSpec / Verify / Bench) -- see $LOG"
   tail -n 30 "$LOG"
   exit 1
 fi
