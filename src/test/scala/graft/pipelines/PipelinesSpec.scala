@@ -178,6 +178,73 @@ class PipelinesSpec extends SparkSpec {
       "monthName", "monthEvaluationId", "semesterName", "semesterEvaluationId"))
   }
 
+  // stuC has BOTH a direct s1 score (45) and customs under s1 (c1=40 → pct
+  // 80, c2=50 → pct 50), plus c3, a custom under the month m1: not a subject
+  // parent, so it is dropped everywhere. stuD's only direct s1 score is
+  // unparseable ("abc"): the month pipeline drops it and falls back to the
+  // custom c1=25 (pct 50); the transcript coerces it to 0 and keeps it.
+  private val mixedTree = tree :+ ev("c3", "m1", "custom", "Orphan", Some(10.0))
+  private val mixedScores = Seq(
+    Sc("s1", "stuC", Some("45"), Some("t9"), Some("2024-02-10T10:00:00Z"), Some(path), None),
+    Sc("c1", "stuC", Some("40"), Some("t8"), Some("2024-02-11T10:00:00Z"), Some(path), None),
+    Sc("c2", "stuC", Some("50"), Some("t8"), Some("2024-02-12T10:00:00Z"), Some(path), None),
+    Sc("c3", "stuC", Some("10"), Some("t8"), Some("2024-02-13T10:00:00Z"), Some(path), None),
+    Sc("s1", "stuD", Some("abc"), Some("t7"), Some("2024-02-10T10:00:00Z"), Some(path), None),
+    Sc("c1", "stuD", Some("25"), Some("t6"), Some("2024-02-11T10:00:00Z"), Some(path), None))
+  private val mixedStudents = Seq(
+    Stu("stuC", "Cai", "Chen", None, None, None, None, Some("cam1"), Some("id-c")),
+    Stu("stuD", "Dee", "Diaz", None, None, None, None, Some("cam1"), Some("id-d")))
+
+  test("MonthlySubjectScores: direct beats custom on one pair and still lists the customs") {
+    val rows = MonthlySubjectScores(mixedTree.toDF(), mixedScores.toDF(),
+      mixedStudents.toDF(), srRows.toDF(), subjectRows.toDF()).collect()
+      .map(r => (r.getAs[String]("subjectEvaluationId"), r.getAs[String]("studentId")) -> r)
+      .toMap
+    assert(rows.keySet == Set(("s1", "stuC"), ("s1", "stuD")))
+
+    val c = rows(("s1", "stuC"))
+    assert(c.getAs[String]("scoreSource") == "direct")
+    assert(c.getAs[Double]("score") == 45.0)
+    assert(c.getAs[Double]("percentage") == 90.0)
+    assert(c.getAs[String]("scorerId") == "t9")
+    assert(c.getAs[String]("markedAt") == "2024-02-10 10:00:00")
+    assert(c.getAs[Int]("customEvaluationCount") == 2)
+    val json = c.getAs[String]("customEvaluations")
+    assert(json.contains("\"evaluationId\":\"c1\"") && json.contains("\"evaluationId\":\"c2\""))
+    assert(!json.contains("\"evaluationId\":\"c3\""))
+
+    val d = rows(("s1", "stuD"))
+    assert(d.getAs[String]("scoreSource") == "aggregated")
+    assert(d.getAs[Double]("percentage") == 50.0)
+    assert(d.getAs[Double]("score") == 25.0)
+    assert(d.getAs[String]("scorerId") == "t6")
+    assert(d.getAs[Int]("customEvaluationCount") == 1)
+  }
+
+  test("Transcripts: direct beats custom on one pair; a non-subject custom parent is dropped") {
+    val rows = Transcripts(mixedTree.toDF(), mixedScores.toDF(),
+      mixedStudents.toDF(), srRows.toDF(), subjectRows.toDF()).collect()
+      .map(r => r.getAs[String]("studentId") -> r).toMap
+    assert(rows.keySet == Set("stuC", "stuD"))
+
+    val c = rows("stuC")
+    val detailsC = c.getSeq[org.apache.spark.sql.Row](c.fieldIndex("subjectDetails"))
+    assert(detailsC.map(_.getAs[String]("subjectEvaluationId")) == Seq("s1"))
+    assert(detailsC.head.getAs[Double]("score") == 45.0) // not the custom mean 32.5
+    assert(detailsC.head.getAs[Double]("percentage") == 90.0)
+    assert(c.getAs[Long]("subjectCount") == 1L)
+    assert(c.getAs[String]("scorerId") == "t9")
+    assert(c.getAs[String]("markedAt") == "2024-02-10 10:00:00")
+
+    // the unparseable direct score counts as 0 and still beats the custom
+    val d = rows("stuD")
+    val detailsD = d.getSeq[org.apache.spark.sql.Row](d.fieldIndex("subjectDetails"))
+    assert(detailsD.length == 1)
+    assert(detailsD.head.getAs[Double]("score") == 0.0)
+    assert(detailsD.head.getAs[String]("grade") == "F")
+    assert(d.getAs[String]("scorerId") == "t7")
+  }
+
   test("CopyPipelines.students: watermark + uniqueKey dedup + gender + profile scrub") {
     val wm = java.sql.Timestamp.valueOf("2024-01-10 00:00:00")
     val raw = Seq(
