@@ -24,10 +24,14 @@ import org.apache.spark.sql.functions._
   * list iteration): "first score" attribution = least (markedAt, scorerId);
   * custom-record lists sort by evaluationId. Documented engine behavior.
   *
-  * Plan shape at scale: scores groupBy (evaluationId, studentId) is the one
-  * big exchange; every dimension join broadcasts (dims are semi-join-pruned
-  * to the score batch, S4/J6); the custom→subject rollup aggregates the
-  * already-reduced per-evaluation rows. No driver-side iteration anywhere.
+  * Plan shape: scores reduce per (evaluationId, studentId) with a map-side
+  * partial aggregate and its one exchange, then one repartition by
+  * studentId; the direct score, the custom list and the weighted custom
+  * percentage come out of ONE aggregation per (subject, student), keyed by
+  * a superset of studentId, so no other exchange touches score-derived rows
+  * and no intermediate is planned twice. Every lookup broadcasts. No
+  * driver-side iteration anywhere. PipelinesSpec pins the exchanges, the
+  * one scan of scores and the job count.
   */
 object MonthlySubjectScores {
 
@@ -48,11 +52,7 @@ object MonthlySubjectScores {
   def apply(evaluations: DataFrame, scores: DataFrame, students: DataFrame,
       structureRecords: DataFrame, subjects: DataFrame): DataFrame = {
 
-    val subjEvals = evaluations.filter(col("type") === "subject")
-    val monthEvals = evaluations.filter(col("type") === "month")
-    val customEvals = evaluations.filter(col("type") === "custom")
-
-    // ---- per-(evaluation, student) score reduction (one big exchange) ----
+    // ---- per-(evaluation, student) score reduction ------------------------
     // drop-null averaging + least-(markedAt, scorerId) attribution
     val attrs = struct(col("structurePath"), col("scorerId"), col("markedAt"),
       col("idCard"))
@@ -65,78 +65,73 @@ object MonthlySubjectScores {
           coalesce(col("scorerId"), lit("")))).as("attrs"))
       .filter(col("n_parsed") > 0) // :244-245 skip when nothing parseable
 
-    // ---- custom records: per-(custom eval, student) graded rollup --------
-    val customJoined = perEvalStudent
-      .join(
-        customEvals.select(
-          col("evaluationId"), col("parentId").as("subjectEvaluationId"),
-          col("name").as("customName"),
-          Scalar.toDoubleOrNull(col("maxScore")).as("customMaxRaw"),
-          Scalar.toDoubleOrNull(col("coe")).as("customCoe")),
-        Seq("evaluationId"))
-      .join(subjEvals.select(col("evaluationId").as("subjectEvaluationId")),
-        Seq("subjectEvaluationId")) // :157 parent must be a subject eval
-      .withColumn("customMax", coalesce(col("customMaxRaw"), lit(100.0)))
-      .withColumn("pct", Scalar.percentage(col("avg_score"), col("customMax")))
-      .withColumn("g", Scalar.gradeInfo(col("pct")))
+    // ---- route each row to its subject: a subject evaluation's own scores
+    // are direct, a custom's roll up to its parent (:157) -------------------
+    val routes = evaluations.filter(col("type").isin("subject", "custom"))
+      .select(col("evaluationId"),
+        when(col("type") === "subject", col("evaluationId"))
+          .otherwise(col("parentId")).as("subjectEvaluationId"),
+        (col("type") === "subject").as("isDirect"),
+        col("name").as("customName"),
+        Scalar.toDoubleOrNull(col("maxScore")).as("customMaxRaw"),
+        Scalar.toDoubleOrNull(col("coe")).as("customCoe"))
+    val custom = !col("isDirect")
 
+    // a custom row's graded record
+    val customMax = coalesce(col("customMaxRaw"), lit(100.0))
+    val pct = Scalar.percentage(col("avg_score"), customMax)
+    val g = Scalar.gradeInfo(pct)
     val customRecord = struct(
       col("evaluationId"), col("customName").as("name"),
-      col("avg_score").as("score"), col("customMax").as("maxScore"),
-      col("pct").as("percentage"), col("g.grade").as("grade"),
-      col("g.gpa").as("gpa"), col("g.meaning").as("meaning"),
+      col("avg_score").as("score"), customMax.as("maxScore"),
+      pct.as("percentage"), g("grade").as("grade"),
+      g("gpa").as("gpa"), g("meaning").as("meaning"),
       col("customCoe").as("coe"), lit(null).cast("string").as("description"))
-
-    // per-(subject, student): the custom list + its weighted percentage
     val w = when(col("customCoe").isNull || col("customCoe") <= 0, lit(1.0))
       .otherwise(col("customCoe")) // :293-295 fallback
-    val customBySubject = customJoined
+
+    // ---- per-(subject, student): the direct score, the custom list and its
+    // weighted percentage, one aggregation. Every later operator is keyed by
+    // a superset of studentId, so the one repartition here is the last
+    // score exchange.
+    val bySubject = perEvalStudent
+      .join(broadcast(routes), Seq("evaluationId"))
+      .filter(col("subjectEvaluationId").isNotNull)
+      .repartition(col("studentId"))
       .groupBy(col("subjectEvaluationId"), col("studentId"))
       .agg(
-        sort_array(collect_list(customRecord)).as("customList"),
-        (sum(col("pct") * w) / sum(w)).as("weighted_pct"),
-        min_by(col("attrs"), struct(coalesce(col("attrs.markedAt"), lit("")),
-          col("evaluationId"))).as("custom_attrs"))
-
-    // ---- direct records ---------------------------------------------------
-    val direct = perEvalStudent
-      .join(subjEvals.select(col("evaluationId")), Seq("evaluationId"))
-      .select(col("evaluationId").as("subjectEvaluationId"), col("studentId"),
-        col("avg_score"), col("attrs"))
+        max(col("isDirect")).as("hasDirect"),
+        max(when(col("isDirect"), col("avg_score"))).as("direct_score"),
+        max(when(col("isDirect"), col("attrs"))).as("direct_attrs"),
+        sort_array(collect_list(when(custom, customRecord))).as("customs"),
+        (sum(when(custom, pct * w)) / sum(when(custom, w))).as("weighted_pct"),
+        min_by(col("attrs"), when(custom, struct(
+          coalesce(col("attrs.markedAt"), lit("")), col("evaluationId"))))
+          .as("custom_attrs"))
 
     // ---- assemble: direct wins; aggregated fills the rest (:273-276) ------
-    val subjDim = subjEvals.select(
+    // the join also drops customs whose parent is not a subject (:157)
+    val subjDim = evaluations.filter(col("type") === "subject").select(
       col("evaluationId").as("subjectEvaluationId"),
       col("parentId").as("subjectParentId"), col("name").as("subjectName"),
       Scalar.toDoubleOrNull(col("maxScore")).as("subjectMaxRaw"),
       col("schoolId"), col("groupStructureId").as("evalGroupStructureId"),
       col("createdAt").as("subjectCreatedAt"))
 
-    val directScored = direct
-      .join(customBySubject, Seq("subjectEvaluationId", "studentId"), "left")
-      .join(subjDim, Seq("subjectEvaluationId"))
+    val scored = bySubject
+      .join(broadcast(subjDim), Seq("subjectEvaluationId"))
       .withColumn("subjectMax", coalesce(col("subjectMaxRaw"), lit(100.0)))
-      .withColumn("score", col("avg_score"))
-      .withColumn("percentage", Scalar.percentage(col("score"), col("subjectMax")))
-      .withColumn("scoreSource", lit("direct"))
-
-    val aggregatedScored = customBySubject
-      .join(direct.select(col("subjectEvaluationId"), col("studentId")),
-        Seq("subjectEvaluationId", "studentId"), "left_anti")
-      .join(subjDim, Seq("subjectEvaluationId"))
-      .withColumn("subjectMax", coalesce(col("subjectMaxRaw"), lit(100.0)))
-      .withColumn("percentage", col("weighted_pct"))
-      .withColumn("score",
-        when(col("subjectMax") > 0, col("percentage") * col("subjectMax") / 100)
-          .otherwise(lit(0.0))) // :309
-      .withColumn("attrs", col("custom_attrs"))
-      .withColumn("scoreSource", lit("aggregated"))
-
-    val common = Seq("subjectEvaluationId", "studentId", "score", "percentage",
-      "scoreSource", "attrs", "customList", "subjectParentId", "subjectName",
-      "subjectMax", "schoolId", "evalGroupStructureId", "subjectCreatedAt")
-    val scored = directScored.selectExpr(common: _*)
-      .unionByName(aggregatedScored.selectExpr(common: _*))
+      .withColumn("percentage", when(col("hasDirect"),
+        Scalar.percentage(col("direct_score"), col("subjectMax")))
+        .otherwise(col("weighted_pct")))
+      .withColumn("score", when(col("hasDirect"), col("direct_score"))
+        .when(col("subjectMax") > 0, col("percentage") * col("subjectMax") / 100)
+        .otherwise(lit(0.0))) // :309
+      .withColumn("scoreSource", when(col("hasDirect"), lit("direct"))
+        .otherwise(lit("aggregated")))
+      .withColumn("attrs", when(col("hasDirect"), col("direct_attrs"))
+        .otherwise(col("custom_attrs")))
+      .withColumn("customList", when(size(col("customs")) > 0, col("customs")))
       .withColumn("g", Scalar.gradeInfo(col("percentage")))
 
     // ---- dimension joins (all broadcast; last-wins dedup :143-149) --------
@@ -159,6 +154,7 @@ object MonthlySubjectScores {
         col("nameNative").as("subjectNameNative"), col("credit"),
         col("coe"), col("code"))
     val monthDim = {
+      val monthEvals = evaluations.filter(col("type") === "month")
       val hasAttendance = monthEvals.columns.contains("attendanceColumn")
       val start = if (hasAttendance) col("attendanceColumn.startDate")
         else lit(null).cast("string")

@@ -2,6 +2,7 @@ package graft.pipelines
 
 import graft.functions.Scalar
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** student_transcript_etl — the nested-output pipeline
@@ -29,18 +30,21 @@ import org.apache.spark.sql.functions._
   * greatest markedAt; per-student scorer/markedAt = the greatest
   * subjectEvaluationId's; subjectDetails sorts by subjectEvaluationId.
   *
-  * Scale shape: one exchange for the score reduction, one for the final
-  * (student, structureRecord) assembly; dimension joins broadcast; the
-  * nested array builds via collect_list inside the group — never on the
-  * driver.
+  * Plan shape: scores reduce per (evaluationId, studentId) with a map-side
+  * partial aggregate and its one exchange, then one repartition by
+  * studentId. Direct and custom rows meet in ONE aggregation per (subject,
+  * student), the (student, structureRecord) assembly groups by a superset
+  * of studentId, and the per-student scorer is a window over studentId, so
+  * no other exchange touches score-derived rows and no intermediate is
+  * planned twice. Evaluation and dimension lookups broadcast; the nested
+  * array builds via collect_list inside the group — never on the driver.
+  * PipelinesSpec pins the exchanges, the one scan of scores and the job
+  * count.
   */
 object Transcripts {
 
   def apply(evaluations: DataFrame, scores: DataFrame, students: DataFrame,
       structureRecords: DataFrame, subjects: DataFrame): DataFrame = {
-
-    val subjEvals = evaluations.filter(col("type") === "subject")
-    val customEvals = evaluations.filter(col("type") === "custom")
 
     // ---- per-(evaluation, student) reduction ------------------------------
     // filter null raw, parse, coerce unparseable→0 (:287-288)
@@ -55,50 +59,49 @@ object Transcripts {
           coalesce(col("scorerId"), lit("")))).as("attrs"))
       .filter(col("n_nonnull") > 0)
 
-    // ---- custom→subject unweighted percentage mean (:226-268) -------------
-    val customPct = perEvalStudent
-      .join(customEvals.select(col("evaluationId"),
-          col("parentId").as("subjectEvaluationId"),
-          Scalar.toDoubleOrNull(col("maxScore")).as("customMaxRaw")),
-        Seq("evaluationId"))
-      .join(subjEvals.select(col("evaluationId").as("subjectEvaluationId")),
-        Seq("subjectEvaluationId")) // :209 parent must be a subject eval
-      .withColumn("pct",
-        Scalar.percentage(col("avg0"), coalesce(col("customMaxRaw"), lit(100.0))))
-    val customBySubject = customPct
+    // ---- route each row to its subject: a subject evaluation's own scores
+    // are direct, a custom's roll up to its parent (:209, :226-268) --------
+    val routes = evaluations.filter(col("type").isin("subject", "custom"))
+      .select(col("evaluationId"),
+        when(col("type") === "subject", col("evaluationId"))
+          .otherwise(col("parentId")).as("subjectEvaluationId"),
+        (col("type") === "subject").as("isDirect"),
+        Scalar.toDoubleOrNull(col("maxScore")).as("customMaxRaw"))
+    val custom = !col("isDirect")
+
+    // ---- direct-beats-custom resolution, one aggregation (:258, :280-305):
+    // every later aggregation and window is keyed by a superset of
+    // studentId, so the one repartition here is the last score exchange
+    val bySubject = perEvalStudent
+      .join(broadcast(routes), Seq("evaluationId"))
+      .filter(col("subjectEvaluationId").isNotNull)
+      .repartition(col("studentId"))
       .groupBy(col("subjectEvaluationId"), col("studentId"))
-      .agg(avg(col("pct")).as("avg_custom_pct"), // :258 unweighted
-        max_by(col("attrs"),
-          struct(coalesce(col("attrs.markedAt"), lit("")), col("evaluationId")))
+      .agg(
+        max(col("isDirect")).as("hasDirect"),
+        max(when(col("isDirect"), col("avg0"))).as("direct_score"),
+        max(when(col("isDirect"), col("attrs"))).as("direct_attrs"),
+        avg(when(custom, Scalar.percentage(col("avg0"), col("customMaxRaw"))))
+          .as("avg_custom_pct"), // :258 unweighted
+        max_by(col("attrs"), when(custom,
+          struct(coalesce(col("attrs.markedAt"), lit("")), col("evaluationId"))))
           .as("custom_attrs")) // :297-301 latest marker
 
-    // ---- direct-beats-custom resolution (:280-305) ------------------------
-    val subjDim = subjEvals.select(
+    // the join also drops customs whose parent is not a subject (:209)
+    val subjDim = evaluations.filter(col("type") === "subject").select(
       col("evaluationId").as("subjectEvaluationId"),
       col("parentId").as("subjectParentId"), col("name").as("subjectName"),
       Scalar.toDoubleOrNull(col("maxScore")).as("subjectMaxRaw"),
       col("schoolId"))
 
-    val direct = perEvalStudent
-      .join(subjDim.select(col("subjectEvaluationId")),
-        perEvalStudent("evaluationId") === col("subjectEvaluationId"))
-      .select(col("subjectEvaluationId"), col("studentId"),
-        col("avg0").as("final_score"), col("attrs"))
-
-    val aggregated = customBySubject
-      .join(direct.select(col("subjectEvaluationId"), col("studentId")),
-        Seq("subjectEvaluationId", "studentId"), "left_anti")
-      .join(subjDim.select(col("subjectEvaluationId"), col("subjectMaxRaw")),
-        Seq("subjectEvaluationId"))
-      // :265 percentage→score conversion has NO >0 guard (missing max → 100)
-      .select(col("subjectEvaluationId"), col("studentId"),
-        (col("avg_custom_pct") * coalesce(col("subjectMaxRaw"), lit(100.0)) / 100)
-          .as("final_score"),
-        col("custom_attrs").as("attrs"))
-
-    val scored = direct.unionByName(aggregated)
-      .join(subjDim, Seq("subjectEvaluationId"))
+    val scored = bySubject
+      .join(broadcast(subjDim), Seq("subjectEvaluationId"))
       .withColumn("subjectMax", coalesce(col("subjectMaxRaw"), lit(100.0)))
+      // :265 percentage→score conversion has NO >0 guard (missing max → 100)
+      .withColumn("final_score", when(col("hasDirect"), col("direct_score"))
+        .otherwise(col("avg_custom_pct") * col("subjectMax") / 100))
+      .withColumn("attrs", when(col("hasDirect"), col("direct_attrs"))
+        .otherwise(col("custom_attrs")))
       .withColumn("percentage",
         Scalar.percentage(col("final_score"), col("subjectMax")))
       .withColumn("g", Scalar.gradeInfo(col("percentage")))
@@ -162,15 +165,6 @@ object Transcripts {
         col("monthName"), col("monthEvaluationId"),
         col("semesterName"), col("semesterEvaluationId")))
 
-    // ---- per-student scorer attribution (:331-332, last-write-wins) -------
-    val scorerByStudent = details
-      .groupBy(col("studentId"))
-      .agg(
-        max_by(col("attrs.scorerId"), col("subjectEvaluationId")).as("scorerId"),
-        date_format(Scalar.parseTimestampLoose(
-          max_by(col("attrs.markedAt"), col("subjectEvaluationId"))),
-          "yyyy-MM-dd HH:mm:ss").as("markedAt"))
-
     // ---- transcript assembly (:399-452) -----------------------------------
     val studentDim = students.select(col("studentId"),
       col("firstName").as("studentFirstName"),
@@ -183,21 +177,29 @@ object Transcripts {
       col("name").as("structureRecordName"),
       col("groupStructureId"))
 
+    // per-student scorer/markedAt = the greatest subjectEvaluationId's
+    // (:331-332, last-write-wins): each record's latest, then the student's
+    // latest over a window, which the studentId partitioning already serves
+    val byStudent = Window.partitionBy(col("studentId"))
     details
       .groupBy(col("studentId"), col("structureRecordId"))
       .agg(
         sort_array(collect_list(col("detail"))).as("subjectDetails"),
+        max(col("subjectEvaluationId")).as("lastEvaluationId"),
+        max_by(struct(col("attrs.scorerId"), col("attrs.markedAt")),
+          col("subjectEvaluationId")).as("lastScore"),
         min_by(col("schoolId"), col("subjectEvaluationId")).as("schoolId"), // :417
         sum(col("credit2")).as("totalCredits"),
         (sum(col("credit2") * col("g.gpa")) / sum(col("credit2"))).as("gpaRatio"),
         count(lit(1)).as("subjectCount"))
       .withColumn("totalGPA",
         when(col("totalCredits") > 0, col("gpaRatio")).otherwise(lit(0.0)))
+      .withColumn("scorer",
+        max_by(col("lastScore"), col("lastEvaluationId")).over(byStudent))
       .drop("gpaRatio")
       .join(broadcast(studentDim), Seq("studentId"), "left")
       .join(broadcast(structDim),
         col("structureRecordId") === col("srId2"), "left").drop("srId2")
-      .join(broadcast(scorerByStudent), Seq("studentId"), "left")
       .select(
         col("schoolId"), col("campusId"),
         col("structureRecordId"), col("structureRecordName"),
@@ -208,7 +210,9 @@ object Transcripts {
         col("idCard"), col("gender"), col("dob"),
         col("subjectDetails"),
         col("totalCredits"), col("totalGPA"), col("subjectCount"),
-        col("scorerId"), col("markedAt"),
+        col("scorer.scorerId").as("scorerId"),
+        date_format(Scalar.parseTimestampLoose(col("scorer.markedAt")),
+          "yyyy-MM-dd HH:mm:ss").as("markedAt"),
         date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss").as("createdAt"))
   }
 }

@@ -16,6 +16,31 @@ trait SparkSpec extends AnyFunSuite {
   def col0(df: DataFrame): List[Any] =
     df.collect().map(_.get(0)).toList
 
+  /** Spark jobs started while `body` runs, counted by a job-start
+    * listener. A marked sentinel job runs after `body`; the bus delivers
+    * events in order, so once the sentinel is seen every earlier job start
+    * has been counted. */
+  def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = "graft.sparkSpec.sentinel"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties).flatMap(p => Option(p.getProperty(marker)))
+          .getOrElse("job"))
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setLocalProperty(marker, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      Iterator.continually(starts.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .map(s => Option(s).getOrElse(fail("sentinel job start never delivered")))
+        .takeWhile(_ != "sentinel").size
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Driver actions `body` runs, as seen by a QueryExecutionListener (one
     * event per action). The listener bus delivers asynchronously, so the
     * count is read once it has stopped changing for 500 ms. */

@@ -1,7 +1,6 @@
 package graft.core
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 /** The one parquet read path ([[Tables.read]]): the footer schema equals
@@ -10,30 +9,6 @@ import org.apache.spark.sql.types._
   * every footer generation. */
 class TablesSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
-
-  /** Spark jobs started while `body` runs, counted by a job-start
-    * listener. A marked sentinel job runs after `body`; the bus delivers
-    * events in order, so once the sentinel is seen every earlier job start
-    * has been counted. */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val marker = "graft.tablesSpec.sentinel"
-    val starts = new java.util.concurrent.LinkedBlockingQueue[String]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.put(Option(e.properties).flatMap(p => Option(p.getProperty(marker)))
-          .getOrElse("job"))
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setLocalProperty(marker, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
-      Iterator.continually(starts.poll(30, java.util.concurrent.TimeUnit.SECONDS))
-        .map(s => Option(s).getOrElse(fail("sentinel job start never delivered")))
-        .takeWhile(_ != "sentinel").size
-    } finally sc.removeSparkListener(l)
-  }
 
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString

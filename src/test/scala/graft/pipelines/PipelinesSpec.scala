@@ -245,6 +245,61 @@ class PipelinesSpec extends SparkSpec {
     assert(d.getAs[String]("scorerId") == "t7")
   }
 
+  test("score marts: scores scanned once, one studentId exchange past the partial aggregate, bounded jobs") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = java.nio.file.Files.createTempDirectory("score_marts").toString
+    // scores span two files, so the scan has two partitions and the score
+    // reduction needs its own exchange, as on real sources
+    def stored(name: String, df: org.apache.spark.sql.DataFrame, files: Int = 1) = {
+      df.repartition(files).write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    val ev = stored("evaluations", mixedTree.toDF())
+    val sc = stored("scores", (scoreRows ++ mixedScores).toDF(), files = 2)
+    val stu = stored("students", (studentRows ++ mixedStudents).toDF())
+    val sr = stored("structure_records", srRows.toDF())
+    val sub = stored("subjects", subjectRows.toDF())
+
+    def scoreScans(p: SparkPlan) = p.collect {
+      case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.getName == "scores") => s
+    }
+    def keys(e: ShuffleExchangeExec) = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+      case other => fail(s"unexpected score exchange $other")
+    }
+    def overPartialAggregate(e: ShuffleExchangeExec) = e.child match {
+      case a: BaseAggregateExec => a.aggregateExpressions.forall(_.mode == Partial)
+      case _ => false
+    }
+    Seq(
+      ("transcript", Transcripts(ev, sc, stu, sr, sub), 13),
+      ("monthly", MonthlySubjectScores(ev, sc, stu, sr, sub), 11)
+    ).foreach { case (name, mart, maxJobs) =>
+      val plan = mart.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      assert(scoreScans(plan).size == 1, s"$name scans scores more than once:\n$plan")
+      // the shuffles whose input derives from scores: the map-side-combined
+      // (evaluationId, studentId) reduction, then at most one studentId pass
+      val (reduce, after) = plan
+        .collect { case e: ShuffleExchangeExec if scoreScans(e).nonEmpty => e }
+        .partition(e => overPartialAggregate(e) && keys(e) == Seq("evaluationId", "studentId"))
+      assert(reduce.size == 1, s"$name: no map-side-combined score reduction:\n$plan")
+      assert(after.size <= 1 && after.forall(keys(_) == Seq("studentId")),
+        s"$name: score-derived exchanges after the reduction ${after.map(keys)}:\n$plan")
+      val jobs = jobsIn(mart.write.parquet(s"$dir/out_$name"))
+      info(s"$name: $jobs jobs")
+      assert(jobs <= maxJobs, s"$name ran $jobs jobs, over $maxJobs")
+    }
+  }
+
   test("CopyPipelines.students: watermark + uniqueKey dedup + gender + profile scrub") {
     val wm = java.sql.Timestamp.valueOf("2024-01-10 00:00:00")
     val raw = Seq(
