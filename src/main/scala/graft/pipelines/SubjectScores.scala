@@ -18,11 +18,13 @@ import org.apache.spark.sql.functions._
   * rollup lives in [[graft.operators.TreeRollup]] for callers who want the
   * evidently-intended semantics.
   *
-  * Plan shape: one broadcast anti-join (children-parents is small), one
-  * groupBy(evaluationId) over scores with map-side partial aggregation, one
-  * broadcast join of the aggregate onto the subject dimension. At 100 TB of
-  * scores the only exchange is the score aggregation — the minimum for this
-  * computation.
+  * Plan shape: one broadcast anti-join against the evaluations that have a
+  * child (its build side is not deduplicated: an anti join only tests
+  * membership, and a distinct would cost an exchange), one
+  * groupBy(evaluationId) over scores with map-side partial aggregation, and
+  * one broadcast join of that per-evaluation aggregate onto the leaf
+  * subjects. At 100 TB of scores the only exchange is the score
+  * aggregation — the minimum for this computation.
   */
 object SubjectScores {
 
@@ -37,7 +39,6 @@ object SubjectScores {
     val parentsWithChildren = evaluations
       .filter(col("parentId").isNotNull && col("parentId") =!= "na")
       .select(col("parentId").as("evaluationId"))
-      .distinct()
 
     val leafSubjects = evaluations
       .filter(col("type") === "subject")
