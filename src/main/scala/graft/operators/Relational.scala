@@ -29,6 +29,17 @@ object Relational {
       .drop("__rn")
   }
 
+  /** [[dedupLatest]] for a small dimension that a join broadcasts. Ties
+    * left by `ordering` are broken by the row's own values, so the pick is
+    * total: a replayed row and its original are interchangeable, and any
+    * other tie resolves the same way on every run. The dimension is read as
+    * one partition — the broadcast collects it whole anyway — and a single
+    * partition already satisfies the window, so the dedup runs inside the
+    * broadcast's job with no exchange or job of its own.
+    */
+  def latestDim(df: DataFrame, keys: Seq[String], ordering: Seq[Column]): DataFrame =
+    dedupLatest(df.coalesce(1), keys, ordering :+ struct(df.columns.map(col): _*).asc)
+
   /** MERGE-INTO upsert semantics as one shuffle: rows from `updates`
     * replace same-key rows in `existing`, new keys insert, untouched keys
     * survive — the warehouse "apply this batch of changes" primitive

@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import graft.functions.Scalar
+import graft.operators.Relational
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -44,10 +45,12 @@ object MonthlySubjectScores {
     * @param scores      evaluationId, studentId, score, scorerId, markedAt,
     *                    structurePath, idCard
     * @param students    studentId, firstName, lastName, firstNameNative,
-    *                    lastNameNative, dob, gender, campusId, idCard
-    * @param structureRecords structureRecordId, name, groupStructureId
+    *                    lastNameNative, dob, gender, campusId, idCard,
+    *                    updatedAt
+    * @param structureRecords structureRecordId, name, groupStructureId,
+    *                    updatedAt
     * @param subjects    subjectId, name, nameNative, credit, code,
-    *                    structureRecordId, coe
+    *                    structureRecordId, coe, updatedAt
     */
   def apply(evaluations: DataFrame, scores: DataFrame, students: DataFrame,
       structureRecords: DataFrame, subjects: DataFrame): DataFrame = {
@@ -134,25 +137,31 @@ object MonthlySubjectScores {
       .withColumn("customList", when(size(col("customs")) > 0, col("customs")))
       .withColumn("g", Scalar.gradeInfo(col("percentage")))
 
-    // ---- dimension joins (all broadcast; last-wins dedup :143-149) --------
-    val studentDim = graft.operators.Relational.dedupLatest(
-      students, Seq("studentId"), Seq(col("studentId"))) // input assumed unique
-      .select(col("studentId"), col("firstName").as("studentFirstName"),
+    // ---- dimension joins (all broadcast; last-wins dicts :143-149). The
+    // sources carry every version of a row, replays included: each lookup
+    // keeps the latest per key ----------------------------------------------
+    val studentDim = Relational.latestDim(
+      students.select(col("studentId"), col("updatedAt"),
+        col("firstName").as("studentFirstName"),
         col("lastName").as("studentLastName"),
         col("firstNameNative").as("studentFirstNameNative"),
         col("lastNameNative").as("studentLastNameNative"),
         col("idCard").as("studentIdCard"), col("gender"), col("dob"),
-        col("campusId"))
-    val structDim = structureRecords.select(
-      col("structureRecordId").as("srId"),
-      col("name").as("structureRecordName"),
-      col("groupStructureId").as("structGroupStructureId"))
-    // last-wins per structureRecordId (:148-149): keep greatest subjectId
-    val subjectDim = graft.operators.Relational.dedupLatest(
-      subjects, Seq("structureRecordId"), Seq(col("subjectId").desc))
-      .select(col("structureRecordId").as("srId"),
-        col("nameNative").as("subjectNameNative"), col("credit"),
-        col("coe"), col("code"))
+        col("campusId")),
+      Seq("studentId"), Seq(col("updatedAt").desc)).drop("updatedAt")
+    val structDim = Relational.latestDim(
+      structureRecords.select(col("structureRecordId").as("srId"),
+        col("updatedAt"), col("name").as("structureRecordName"),
+        col("groupStructureId").as("structGroupStructureId")),
+      Seq("srId"), Seq(col("updatedAt").desc)).drop("updatedAt")
+    // last-wins per structureRecordId (:148-149): greatest subjectId, at its
+    // latest version
+    val subjectDim = Relational.latestDim(
+      subjects.select(col("structureRecordId").as("srId"), col("subjectId"),
+        col("updatedAt"), col("nameNative").as("subjectNameNative"),
+        col("credit"), col("coe"), col("code")),
+      Seq("srId"), Seq(col("subjectId").desc, col("updatedAt").desc))
+      .drop("subjectId", "updatedAt")
     val monthDim = {
       val monthEvals = evaluations.filter(col("type") === "month")
       val hasAttendance = monthEvals.columns.contains("attendanceColumn")

@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import graft.functions.Scalar
+import graft.operators.Relational
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -136,12 +137,14 @@ object Transcripts {
         when(col("ptype") === "month" && col("gtype") === "semester", col("gid")),
         when(col("ptype") === "semester", col("pid"))))
 
-    // ---- first-match subject info per structureRecordId (:325-328) --------
-    val subjectDim = graft.operators.Relational.dedupLatest(
-      subjects, Seq("structureRecordId"), Seq(col("subjectId").asc))
-      .select(col("structureRecordId").as("srId"),
-        col("nameNative").as("subjectNameNative"),
-        col("code"), col("credit"))
+    // ---- first-match subject info per structureRecordId (:325-328), each
+    // subject at its latest version -----------------------------------------
+    val subjectDim = Relational.latestDim(
+      subjects.select(col("structureRecordId").as("srId"), col("subjectId"),
+        col("updatedAt"), col("nameNative").as("subjectNameNative"),
+        col("code"), col("credit")),
+      Seq("srId"), Seq(col("subjectId").asc, col("updatedAt").desc))
+      .drop("subjectId", "updatedAt")
 
     val details = withParents
       .join(broadcast(subjectDim), col("structureRecordId") === col("srId"), "left")
@@ -166,16 +169,21 @@ object Transcripts {
         col("semesterName"), col("semesterEvaluationId")))
 
     // ---- transcript assembly (:399-452) -----------------------------------
-    val studentDim = students.select(col("studentId"),
-      col("firstName").as("studentFirstName"),
-      col("lastName").as("studentLastName"),
-      col("firstNameNative").as("studentFirstNameNative"),
-      col("lastNameNative").as("studentLastNameNative"),
-      col("idCard"), col("gender"), col("dob"), col("campusId"))
-    val structDim = structureRecords.select(
-      col("structureRecordId").as("srId2"),
-      col("name").as("structureRecordName"),
-      col("groupStructureId"))
+    // the sources carry every version of a row, replays included: each
+    // lookup keeps the latest per key
+    val studentDim = Relational.latestDim(
+      students.select(col("studentId"), col("updatedAt"),
+        col("firstName").as("studentFirstName"),
+        col("lastName").as("studentLastName"),
+        col("firstNameNative").as("studentFirstNameNative"),
+        col("lastNameNative").as("studentLastNameNative"),
+        col("idCard"), col("gender"), col("dob"), col("campusId")),
+      Seq("studentId"), Seq(col("updatedAt").desc)).drop("updatedAt")
+    val structDim = Relational.latestDim(
+      structureRecords.select(col("structureRecordId").as("srId2"),
+        col("updatedAt"), col("name").as("structureRecordName"),
+        col("groupStructureId")),
+      Seq("srId2"), Seq(col("updatedAt").desc)).drop("updatedAt")
 
     // per-student scorer/markedAt = the greatest subjectEvaluationId's
     // (:331-332, last-write-wins): each record's latest, then the student's

@@ -16,12 +16,17 @@ case class Sc(evaluationId: String, studentId: String, score: Option[String],
 case class Stu(studentId: String, firstName: String, lastName: String,
     firstNameNative: Option[String], lastNameNative: Option[String],
     dob: Option[java.sql.Date], gender: Option[String],
-    campusId: Option[String], idCard: Option[String])
+    campusId: Option[String], idCard: Option[String],
+    updatedAt: java.sql.Timestamp = Fixture.T0)
 case class SR(structureRecordId: String, name: String,
-    groupStructureId: Option[String])
+    groupStructureId: Option[String], updatedAt: java.sql.Timestamp = Fixture.T0)
 case class Sub(subjectId: String, name: String, nameNative: Option[String],
     credit: Option[Double], code: Option[String], structureRecordId: String,
-    coe: Option[Double])
+    coe: Option[Double], updatedAt: java.sql.Timestamp = Fixture.T0)
+object Fixture {
+  val T0: java.sql.Timestamp = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+  val T1: java.sql.Timestamp = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
+}
 
 class PipelinesSpec extends SparkSpec {
   import spark.implicits._
@@ -243,6 +248,46 @@ class PipelinesSpec extends SparkSpec {
     assert(detailsD.head.getAs[Double]("score") == 0.0)
     assert(detailsD.head.getAs[String]("grade") == "F")
     assert(d.getAs[String]("scorerId") == "t7")
+  }
+
+  // versioned dimension sources, as the daily extracts deliver them: sr1 is
+  // replayed (the same row twice), sr2 is updated, stuA has two versions,
+  // and each of sub1 and sub2 has a newer version
+  private val versionedStudents = studentRows :+
+    studentRows.head.copy(firstName = "Alicia", updatedAt = Fixture.T1)
+  private val versionedRecords = Seq(SR("sr1", "Class A", Some("gs1")),
+    SR("sr1", "Class A", Some("gs1")), SR("sr2", "Class B", Some("gs2")),
+    SR("sr2", "Class B2", Some("gs2"), Fixture.T1))
+  private val versionedSubjects = subjectRows ++ Seq(
+    subjectRows(0).copy(credit = Some(5.0), updatedAt = Fixture.T1),
+    subjectRows(1).copy(nameNative = Some("MathNative2b"), updatedAt = Fixture.T1))
+  private val versionedScores = Seq(
+    Sc("s1", "stuA", Some("40"), Some("t1"), Some("2024-02-01T10:00:00Z"), Some("p#sr1#x"), None),
+    Sc("s2", "stuA", Some("10"), Some("t2"), Some("2024-02-04T10:00:00Z"), Some("p#sr2#x"), None))
+
+  test("score marts: one row per key over versioned and replayed dimension rows") {
+    val months = MonthlySubjectScores(tree.toDF(), versionedScores.toDF(),
+      versionedStudents.toDF(), versionedRecords.toDF(), versionedSubjects.toDF())
+      .collect()
+    assert(months.length == 2)
+    val m = months.map(r => r.getAs[String]("subjectEvaluationId") -> r).toMap
+    assert(m("s1").getAs[String]("structureRecordName") == "Class A")
+    assert(m("s2").getAs[String]("structureRecordName") == "Class B2") // latest
+    assert(months.forall(_.getAs[String]("studentFirstName") == "Alicia"))
+    // last-wins subject sub2, at its latest version
+    assert(m("s1").getAs[String]("subjectNameNative") == "MathNative2b")
+
+    val transcripts = Transcripts(tree.toDF(), versionedScores.toDF(),
+      versionedStudents.toDF(), versionedRecords.toDF(), versionedSubjects.toDF())
+      .collect()
+    assert(transcripts.length == 2)
+    val t = transcripts.map(r => r.getAs[String]("structureRecordId") -> r).toMap
+    assert(t("sr1").getAs[String]("structureRecordName") == "Class A")
+    assert(t("sr2").getAs[String]("structureRecordName") == "Class B2")
+    assert(transcripts.forall(_.getAs[String]("studentFirstName") == "Alicia"))
+    // first-match subject sub1, at its latest version
+    val d = t("sr1").getSeq[org.apache.spark.sql.Row](t("sr1").fieldIndex("subjectDetails"))
+    assert(d.map(_.getAs[Double]("credit")) == Seq(5.0))
   }
 
   test("score marts: scores scanned once, one studentId exchange past the partial aggregate, bounded jobs") {
