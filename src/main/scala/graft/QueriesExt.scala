@@ -516,15 +516,19 @@ object QueriesExt {
   /** SimHash fingerprints: 32-bit near-dup sketch per document (frequency-
     * weighted term hashes; Hamming-close fingerprints ⇒ similar docs).
     * The fused kernel makes the sketch a pure map — the only exchange left
-    * in the plan is the output ordering. The `isNotNull` filter mirrors the
-    * grouped form's drop of token-less documents (never fires here: split
-    * always yields ≥1 token for non-null text). */
+    * in the plan is the output ordering. The sketch is computed after that
+    * exchange, once: the range partitioner's sampling job re-executes the
+    * exchange's map side, which is now only the (doc_id, text) scan. The
+    * guard sits on `text`, where the sketch is null exactly when the text
+    * is (split always yields ≥1 token); a guard on the sketch itself would
+    * be pushed below the sort and pull the kernel back into the map side. */
   private val q33: Q = (s, dir) =>
     t(s, dir, "documents")
+      .select(col("doc_id"), col("text"))
+      .filter(col("text").isNotNull)
+      .orderBy(col("doc_id"))
       .select(col("doc_id"),
         Text.simhash32Fused(Text.tokenHashes(col("text"))).as("simhash"))
-      .filter(col("simhash").isNotNull)
-      .orderBy(col("doc_id"))
 
   private val q33Sql =
     """WITH t AS (SELECT doc_id,
@@ -1273,15 +1277,21 @@ object QueriesExt {
     * percentiles (p50/p90/p99) + count — the data-quality monitoring
     * readout. Spark's `percentile` and DuckDB's `quantile_cont` share the
     * p·(n−1) linear-interpolation definition, so exact values
-    * cross-check. */
+    * cross-check. Rows are first counted per (stratum, value) in a
+    * map-side-combined hash aggregate, and the percentiles take those
+    * counts as frequencies: the same multiset, so the same exact values,
+    * but the exact percentile map is updated once per distinct value
+    * instead of once per row. */
   private val q54: Q = (s, dir) =>
     t(s, dir, "lineitem")
+      .groupBy(col("l_returnflag"), col("l_quantity"))
+      .agg(count(lit(1)).as("c"))
       .groupBy(col("l_returnflag"))
       .agg(
-        expr("percentile(l_quantity, 0.5)").as("p50"),
-        expr("percentile(l_quantity, 0.9)").as("p90"),
-        expr("percentile(l_quantity, 0.99)").as("p99"),
-        count(lit(1)).as("n"))
+        expr("percentile(l_quantity, 0.5, c)").as("p50"),
+        expr("percentile(l_quantity, 0.9, c)").as("p90"),
+        expr("percentile(l_quantity, 0.99, c)").as("p99"),
+        sum(col("c")).as("n"))
       .orderBy(col("l_returnflag"))
 
   private val q54Sql =

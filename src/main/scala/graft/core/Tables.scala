@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -77,7 +78,10 @@ object Tables {
       .getOrElse(throw new IllegalArgumentException(s"$path: no parquet data file"))
     val meta =
       try {
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+        // options built from the session's conf: the one-argument open
+        // builds a fresh default Hadoop conf, re-parsing its XML resources
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf),
+          HadoopReadOptions.builder(conf).build())
         try reader.getFooter.getFileMetaData finally reader.close()
       } catch {
         case e: Exception => throw new IllegalArgumentException(

@@ -92,8 +92,10 @@ object Sinks {
       mode: SaveMode = SaveMode.Append,
       guardEmpty: Boolean = true): Int = {
     if (guardEmpty && df.isEmpty) return -1
+    // the planned write sorts by the partition columns unless its input
+    // already is, and its sort would replace ours: lead with them
     val sorted =
-      if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.map(col): _*)
+      if (sortCols.nonEmpty) df.sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
       else df
     val writer = sorted.write.mode(mode)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)

@@ -7,14 +7,26 @@ package graft
   * not a cluster bill.
   */
 class PlanShapeSpec extends SparkSpec {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
   private val sf = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String =
+  private def plan(name: String): String = executed(name).toString
+
+  private def executed(name: String): SparkPlan =
     // tune registers the graft_* SQL functions q72 needs — the driver's
     // entry points do the same, so the sweep must not depend on another
     // suite having tuned the shared session first
     Queries.queries(name)(graft.core.Sessions.tune(spark), sf)
-      .queryExecution.executedPlan.toString
+      .queryExecution.executedPlan
+
+  /** The executed plan as built; under AQE its initial plan, which already
+    * holds every exchange. */
+  private def physical(name: String): SparkPlan = executed(name) match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case other => other
+  }
 
   test("q01: filter and 5-column projection reach the parquet scan") {
     val p = plan("q01_scan_projection")
@@ -110,6 +122,22 @@ class PlanShapeSpec extends SparkSpec {
     assert("Exchange".r.findAllIn(p).size == 1,
       s"sketch stage must not shuffle (fused kernel regressed?):\n$p")
     assert(!p.contains("Generate"), "fused sketch must not explode")
+  }
+
+  test("q54: the exact percentiles read per-(flag, quantity) counts, not rows") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, Percentile}
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
+    val partial = physical("q54_percentiles").collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+        e.mode == Partial && e.aggregateFunction.isInstanceOf[Percentile]) => a
+    }
+    assert(partial.size == 1, s"one partial percentile aggregate:\n$partial")
+    partial.head.child match {
+      case h: HashAggregateExec =>
+        assert(h.groupingExpressions.map(_.name) == Seq("l_returnflag", "l_quantity"),
+          s"percentiles must read the (flag, quantity) counts:\n${partial.head}")
+      case other => fail(s"percentiles read ${other.nodeName}, not a count aggregate:\n$other")
+    }
   }
 
   test("q32: the minhash signature stage has no explode and no aggregate") {
@@ -353,6 +381,44 @@ class PlanShapeSpec extends SparkSpec {
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q: nested-loop join:\n$p")
       spark.catalog.clearCache() // q31/q32/q35/… cache doc/emb projections
     }
+  }
+
+  test("NO query evaluates a graft_* kernel in the map side of a range exchange") {
+    // A range exchange (a global ORDER BY) samples its input with a job of
+    // its own, which re-executes the whole map side: a kernel there runs
+    // twice. The fix is to sort first and compute the kernel after the
+    // exchange, or to end the kernel's stage at an exchange the query
+    // needs anyway. Each exception carries its reason: a filter on the
+    // kernel's output needs the kernel before the sort, and a kernel that
+    // is cheap against its scan measured no faster computed after it.
+    val exceptions = Map(
+      "q31_dedup_ngram_jaccard" -> "keeps pairs with graft_jaccard >= 0.8",
+      "q32_dedup_minhash_lsh" -> "keeps pairs with graft_jaccard >= 0.8",
+      "q41_dedup_embedding" -> "keeps pairs with a graft_dot_q cosine >= 0.4",
+      "q61_source_centroids" -> "cosines of ~10 centroids: no faster after the sort at sf0.1",
+      "q77_zorder_key" -> "a few shifts per row: no faster after the sort at sf0.1")
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    // the nodes one map task of `p`'s stage runs, up to the exchanges
+    // (shuffle or broadcast) that feed it
+    def stage(p: SparkPlan): Seq[SparkPlan] =
+      p +: p.children.filterNot(_.isInstanceOf[Exchange]).flatMap(stage)
+    val hits = Queries.queries.keys.toSeq.sorted.flatMap { q =>
+      val kernels = physical(q).collect {
+        case x: ShuffleExchangeExec if x.outputPartitioning.isInstanceOf[RangePartitioning] =>
+          stage(x.child)
+      }.flatten.flatMap(_.expressions.flatMap(_.collect {
+        case e if e.prettyName.startsWith("graft_") => e.prettyName
+      }))
+      spark.catalog.clearCache()
+      if (kernels.isEmpty) None else Some(q -> kernels.distinct.sorted)
+    }.toMap
+    val unlisted = hits.keySet -- exceptions.keySet
+    assert(unlisted.isEmpty, "kernels sampled and re-run by the output sort: " +
+      unlisted.toSeq.sorted.map(q => s"$q ${hits(q).mkString(",")}").mkString("; "))
+    val stale = exceptions -- hits.keySet
+    assert(stale.isEmpty, "listed exceptions no longer apply: " +
+      stale.map { case (q, why) => s"$q ($why)" }.mkString("; "))
   }
 
   test("q112/q113/q115: round-4 queries shuffle exactly where inherent") {

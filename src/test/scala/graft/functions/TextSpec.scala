@@ -273,6 +273,15 @@ class TextSpec extends SparkSpec {
     assert(fused(3).isEmpty && !grouped.contains(3))
   }
 
+  test("simhash of the token hashes is null exactly when the text is null") {
+    // q33 guards on `text` instead of on the sketch; this makes them equal
+    val docs = Seq(Some("a b c"), Some(""), Some(" "), Some("a  b "), Some("é ü"),
+      None).toDF("text")
+    val got = docs.select($"text".isNull,
+      Text.simhash32Fused(Text.tokenHashes($"text")).isNull).collect()
+    got.foreach(r => assert(r.getBoolean(0) == r.getBoolean(1), s"text null ≠ sketch null: $r"))
+  }
+
   test("graft_minhash / graft_simhash SQL functions resolve and type-check") {
     graft.plans.GraftFunctions.register(spark)
     val row = spark.sql(

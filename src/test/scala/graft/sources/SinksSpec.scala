@@ -24,6 +24,22 @@ class SinksSpec extends SparkSpec {
     assert(scan.contains("PartitionFilters") && scan.contains("schoolId"))
   }
 
+  test("writePartitioned keeps the declared order inside each written file") {
+    val dir = Files.createTempDirectory("sinks_spec_order").toString + "/t"
+    // input ordered by updatedAt, against the declared subjectId order
+    val df = (1 to 200).map(i => (s"s${i % 2}", 1000 - i, i.toLong))
+      .toDF("schoolId", "subjectId", "updatedAt").coalesce(1)
+    Sinks.writePartitioned(df, dir, Seq("schoolId"), Seq("subjectId"), SaveMode.Overwrite)
+    val files = new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+    assert(files.length == 2)
+    files.foreach { f =>
+      // one small file reads as one split, in file order
+      val ids = spark.read.parquet(f.getPath).select("subjectId").as[Int].collect().toSeq
+      assert(ids.size == 100 && ids == ids.sorted, s"${f.getName} not ordered by subjectId")
+    }
+  }
+
   test("writePartitioned skips empty batches (K4 guard)") {
     val dir = Files.createTempDirectory("sinks_spec_empty").toString + "/t"
     val df = Seq(("s1", 1)).toDF("schoolId", "id").filter($"id" < 0)

@@ -7,8 +7,9 @@
 #
 # Runs, in one sbt JVM: SmokeGateSpec (catalog + streaming tripwires),
 # SessionsSpec (the codegen cache size), PipelinesSpec (the ten pipelines'
-# semantics and the score marts' plan shape) and PlanShapeSpec (the
-# catalogue's scale-critical plan properties),
+# semantics and the score marts' plan shape), PlanShapeSpec (the
+# catalogue's scale-critical plan properties), TablesSpec (the one parquet
+# read path) and SinksSpec (the writers' layouts and orders),
 # graft.Verify at sf0.001 and at sf0.01, then a 1-rep calibrated
 # mini-bench at sf0.01; then the benchmark harness's own tests (`sbt test`
 # in perfbench/, which the engine's test run does not cover); then the
@@ -31,13 +32,13 @@ SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 \
 SPARK_GRAFT_BENCH_REPS=1 \
   sbt -batch \
-    "testOnly graft.SmokeGateSpec graft.core.SessionsSpec graft.pipelines.PipelinesSpec graft.PlanShapeSpec" \
+    "testOnly graft.SmokeGateSpec graft.core.SessionsSpec graft.pipelines.PipelinesSpec graft.PlanShapeSpec graft.core.TablesSpec graft.sources.SinksSpec" \
     "runMain graft.Verify /root/testdata/sf0.001 $OUT" \
     "runMain graft.Verify /root/testdata/sf0.01 $OUT_SF001" \
     "runMain graft.Bench" >> "$LOG" 2>&1
 rc=$?
 if [ $rc -ne 0 ]; then
-  echo "FAIL: sbt stage rc=$rc (SmokeGateSpec / SessionsSpec / PipelinesSpec / PlanShapeSpec / Verify / Bench) -- see $LOG"
+  echo "FAIL: sbt stage rc=$rc (SmokeGateSpec / SessionsSpec / PipelinesSpec / PlanShapeSpec / TablesSpec / SinksSpec / Verify / Bench) -- see $LOG"
   tail -n 30 "$LOG"
   exit 1
 fi
